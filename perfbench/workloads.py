@@ -38,7 +38,7 @@ from mistral_ocr_pipeline_spark.plans.extract_pipeline import (
 from mistral_ocr_pipeline_spark.sources.catalog import TableCatalog
 
 from . import gate
-from .inputs import SKEW_FILES, InputSet
+from .inputs import InputSet
 from .tracing import Tracer
 
 KINDS = ("plain", "html", "pdf_layout", "empty", "error")
@@ -160,11 +160,6 @@ class OrderedSkew(Workload):
     family = "skew"
     coarse_input = True
 
-    def register(self, ctx):
-        # one read partition per conv_id bucket file: the conversation-
-        # grouped source arrives coarser than the task slots
-        return ctx.spark.read.parquet(ctx.inputs.table_dir).coalesce(SKEW_FILES)
-
     def _ordered(self, ctx):
         return with_stable_order(extract_transcripts(ctx.df))
 
@@ -194,8 +189,10 @@ class OrderedSkew(Workload):
 
 class CheckpointResume(Workload):
     name = "checkpoint_resume"
-    # a cycle costs ~8 s; two timed cycles keep a run near a minute
-    min_passes = 2
+    # a cycle costs ~7 s on a 4-core host, a third of it run_extraction's
+    # fixed costs; passes keep speeding up for a few cycles, and with five
+    # the median is the middle pass, not the mean of a slow and a fast one
+    min_passes = 5
 
     def __init__(self) -> None:
         self.last_warehouse: str | None = None
@@ -214,9 +211,10 @@ class CheckpointResume(Workload):
         return killed, resumed
 
     def warm_up(self, ctx):
-        # a whole cycle: a smaller one plans different queries, so the
-        # first timed passes would still pay for code generation and JIT.
-        # The timed passes' own output is checked instead (see finish)
+        # a whole cycle: most of its cost is the first run of each query
+        # (Python workers, code generation), which a half-size cycle pays
+        # as well.  The timed passes' own output is checked instead (see
+        # finish)
         wh = ctx.fresh_dir("warehouse")
         self._cycle(ctx, Tracer(False), TableCatalog(ctx.spark, wh))
         shutil.rmtree(wh, ignore_errors=True)
