@@ -1,6 +1,6 @@
 """Benchmark entry point.
 
-    python3 perfbench/run.py --workload ordered_skew --seed 1 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload ordered_skew --seed 1 --seconds 15 --trace 0
 
 Generates the seeded inputs (cached under ``.perfbench/cache``), starts one
 local Spark session with ``slots`` task slots, registers the input, runs an
