@@ -16,7 +16,7 @@ Spark DataFrame engine:
   text analysis, multimodal plumbing).
 * ``sources/``     — table catalog shim (Parquet-backed; Iceberg-shaped
   API) and the deterministic transcripts fixture generator.
-* ``checkpoint/``  — per-partition lineage + resume (anti-join) protocol.
+* ``checkpoint/``  — per-partition lineage + resume (isin filter) protocol.
 * ``streaming/``   — incremental (AvailableNow-style) extraction runner.
 """
 

@@ -11,26 +11,35 @@ utils/utils.py:291-304, main.py:244-257) and the failures.jsonl sidecar
 
 Unit of work = ``conv_bucket = pmod(hash(conv_id), n_buckets)`` — a
 deterministic, data-independent partition of conversation space (the
-Iceberg ``bucket(N, conv_id)`` transform's moral equivalent).  A killed
-run resumes by anti-joining input buckets against committed lineage rows
-(J1 in SURVEY.md §2.4) and recomputes nothing that committed.
+Iceberg ``bucket(N, conv_id)`` transform's moral equivalent).  A run
+reads the lineage once, on the driver (at most one row per bucket per
+run): it yields both the committed set and the prior totals.  A killed
+run resumes with an ``isin`` filter over the buckets still to do, ahead
+of extraction, and recomputes nothing that committed.
 
 Commit protocol (write-audit-publish, SURVEY.md §7.4.6): a batch's data
 files AND its lineage rows are staged as unreferenced snapshots, the
-staged data is audited (sampled read-back), and both publish in ONE
-atomic catalog commit (``TableCatalog.commit`` — a single ``_HEAD``
-pointer swap).  A kill at any instant leaves either both visible or
-neither; the orphan-drop below remains as defense-in-depth for catalogs
-whose data/lineage got out of sync through external surgery (e.g. a
-partial restore), publishing a new data snapshot that omits the orphan
-bucket dirs (metadata-only, hardlinks) before reprocessing."""
+staged data is audited (per bucket, the staged Parquet footers' row
+counts must equal the rows ``observe()`` counted during the write), and
+both publish in ONE atomic catalog commit (``TableCatalog.commit`` — a
+single ``_HEAD`` pointer swap).  A kill at any instant leaves either both
+visible or neither; the orphan-drop below remains as defense-in-depth for
+catalogs whose data/lineage got out of sync through external surgery
+(e.g. a partial restore), publishing a new data snapshot that omits the
+orphan bucket dirs (metadata-only, hardlinks) before reprocessing.
+Lineage rows are written with pyarrow and totals are prior lineage plus
+observed values, so, as in an Iceberg commit, nothing is read back: the
+staged output write is a run's only Spark job."""
 
 from __future__ import annotations
 
+import glob
 import os
 import uuid
 from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import (
     DataFrame,
     Observation,
@@ -38,6 +47,7 @@ from pyspark.sql import (
     functions as F,
     types as T,
 )
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from mistral_ocr_pipeline_spark.plans.extract_pipeline import extract_transcripts
 from mistral_ocr_pipeline_spark.sources.catalog import TableCatalog
@@ -55,6 +65,8 @@ LINEAGE_SCHEMA = T.StructType(
         T.StructField("finished_at", T.TimestampType(), True),
     ]
 )
+# times are timestamp("us", tz="UTC"): no session timezone can shift them
+_LINEAGE_ARROW = to_arrow_schema(LINEAGE_SCHEMA)
 
 DEFAULT_N_BUCKETS = 16
 
@@ -65,17 +77,21 @@ def with_conv_bucket(df: DataFrame, n_buckets: int = DEFAULT_N_BUCKETS) -> DataF
     )
 
 
-def committed_buckets(catalog: TableCatalog, lineage_table: str) -> set[int]:
+def _read_lineage(catalog: TableCatalog, lineage_table: str) -> tuple[set[int], int, int]:
+    """(committed buckets, total rows, total failures) of the current
+    lineage snapshot, read on the driver — no Spark job."""
     if not catalog.exists(lineage_table):
-        return set()
-    rows = (
-        catalog.read(lineage_table)
-        .filter(F.col("status") == "committed")
-        .select("conv_bucket")
-        .distinct()
-        .collect()
-    )
-    return {r.conv_bucket for r in rows}
+        return set(), 0, 0
+    t = pq.read_table(
+        catalog.data_path(lineage_table),
+        columns=["conv_bucket", "rows", "failures", "status"],
+    ).to_pydict()
+    committed = {b for b, s in zip(t["conv_bucket"], t["status"]) if s == "committed"}
+    return committed, sum(t["rows"]), sum(t["failures"])
+
+
+def committed_buckets(catalog: TableCatalog, lineage_table: str) -> set[int]:
+    return _read_lineage(catalog, lineage_table)[0]
 
 
 def _drop_orphan_buckets(
@@ -87,20 +103,33 @@ def _drop_orphan_buckets(
     covers externally-desynced catalogs.  The drop is a new snapshot
     omitting the orphan dirs — metadata-only, no data rewrite."""
     data_dir = catalog.data_path(output_table)
-    orphans: list[int] = []
     if data_dir is None or not os.path.isdir(data_dir):
-        return orphans
-    for entry in os.listdir(data_dir):
-        if not entry.startswith("conv_bucket="):
-            continue
-        bucket = int(entry.split("=", 1)[1])
-        if bucket not in committed:
-            orphans.append(bucket)
+        return []
+    buckets = [
+        int(e.split("=", 1)[1]) for e in os.listdir(data_dir) if e.startswith("conv_bucket=")
+    ]
+    orphans = [b for b in buckets if b not in committed]
     if orphans:
         catalog.drop_partition_dirs(
             output_table, [f"conv_bucket={b}" for b in orphans]
         )
     return orphans
+
+
+def _footer_mismatches(snap_dir: str, lineage_rows: list[dict]) -> dict[int, tuple]:
+    """bucket → (staged, observed) rows for each new bucket whose staged
+    Parquet footers do not sum to the rows ``observe()`` counted — a
+    missing or short file shows here; only footers are read, never data
+    pages.  New buckets were uncommitted and orphan-free, so every file
+    under their staged dirs is this run's."""
+    bad = {}
+    for r in lineage_rows:
+        b = r["conv_bucket"]
+        files = glob.glob(os.path.join(snap_dir, f"conv_bucket={b}", "*.parquet"))
+        staged = sum(pq.read_metadata(f).num_rows for f in files)
+        if staged != r["rows"]:
+            bad[b] = (staged, r["rows"])
+    return bad
 
 
 def run_extraction(
@@ -119,33 +148,32 @@ def run_extraction(
 
     ``only_buckets`` restricts the run to a subset — the test hook that
     simulates a kill after k bucket-batches committed.  Returns summary
-    metrics {processed_buckets, skipped_buckets, rows, failures}.
+    metrics {processed_buckets, skipped_buckets, orphans_dropped,
+    total_rows, total_failures}; when every wanted bucket has committed
+    it returns them before planning anything.
 
-    ``audit_sample``: rows of the just-published output to read back as a
-    write audit (0 disables).  The audit is SAMPLED because the lineage
-    metrics themselves no longer come from a read-back: rows/bytes/failures
-    per bucket are collected by ``DataFrame.observe`` DURING the write —
-    at 100 TB a full read-back would be a second complete scan of the
+    ``audit_sample``: 0 disables the write audit; any positive value
+    audits every staged footer (``_footer_mismatches``) before anything
+    publishes.  Rows/bytes/failures per bucket come from
+    ``DataFrame.observe`` DURING the write and the audit reads footers
+    only — at 100 TB a read-back would be a second complete scan of the
     output per run (r01 design flaw)."""
-    committed = committed_buckets(catalog, lineage_table)
+    committed, prior_rows, prior_failures = _read_lineage(catalog, lineage_table)
     orphans = _drop_orphan_buckets(catalog, output_table, committed)
+    wanted = range(n_buckets) if only_buckets is None else only_buckets
+    todo = sorted({int(b) for b in wanted} - committed)
+    summary = {
+        "run_id": run_id,
+        "processed_buckets": 0,
+        "skipped_buckets": len(committed),
+        "orphans_dropped": orphans,
+        "total_rows": prior_rows,
+        "total_failures": prior_failures,
+    }
+    if not todo:
+        return summary
 
-    src = with_conv_bucket(input_df, n_buckets)
-    # J1 resume anti-join: committed buckets drop out of the scan.  The
-    # committed set is tiny (one row per bucket) → broadcast by Catalyst.
-    if committed:
-        lineage_keys = (
-            catalog.read(lineage_table)
-            .filter(F.col("status") == "committed")
-            .select("conv_bucket")
-            .distinct()
-        )
-        src = src.join(F.broadcast(lineage_keys), "conv_bucket", "left_anti")
-    if only_buckets is not None:
-        src = src.filter(F.col("conv_bucket").isin(*[int(b) for b in only_buckets]))
-
-    # tz-AWARE instants: createDataFrame would interpret naive datetimes in
-    # the Spark session timezone, shifting lineage times on non-UTC sessions
+    src = with_conv_bucket(input_df, n_buckets).filter(F.col("conv_bucket").isin(todo))
     started_at = datetime.now(timezone.utc)
     extracted = extract_transcripts(
         src.select("conv_id", "turn_idx", "role", "text", "tool", "ts"),
@@ -154,9 +182,8 @@ def run_extraction(
     out = with_conv_bucket(extracted, n_buckets)
 
     # per-bucket rows/bytes/failures ride the WRITE pass via observe():
-    # one conditional-aggregate triple per bucket (n_buckets is a fixed,
-    # small table property — 3×16 exprs here, 3×1024 on a warehouse-sized
-    # bucket count — all map-side, no extra job, no output re-scan)
+    # one conditional-aggregate triple per bucket still to do — all
+    # map-side, no extra job, no output re-scan
     bytes_col = (
         F.coalesce(F.octet_length("extracted_text"), F.lit(0))
         + F.coalesce(F.octet_length("md"), F.lit(0))
@@ -164,7 +191,7 @@ def run_extraction(
     fail_col = F.col("error").isNotNull().cast("long")
     obs = Observation(f"lineage_{run_id}_{uuid.uuid4().hex[:8]}")
     aggs = []
-    for b in range(n_buckets):
+    for b in todo:
         in_b = (F.col("conv_bucket") == b).cast("long")
         aggs.append(F.sum(in_b).alias(f"rows_{b}"))
         aggs.append(F.sum(in_b * bytes_col).alias(f"bytes_{b}"))
@@ -175,60 +202,31 @@ def run_extraction(
     # atomic catalog commit — a kill anywhere leaves both or neither.
     data_snap = catalog.stage_append(out, output_table, partition_by=["conv_bucket"])
     vals = obs.get  # blocks until the staging write finishes
-
-    lineage_rows = [
-        (
-            run_id,
-            b,
-            b,
-            int(vals[f"rows_{b}"] or 0),
-            int(vals[f"bytes_{b}"] or 0),
-            int(vals[f"fails_{b}"] or 0),
-            "committed",
-            started_at,
-            datetime.now(timezone.utc),
-        )
-        for b in range(n_buckets)
-        if (vals[f"rows_{b}"] or 0) > 0
+    finished_at = datetime.now(timezone.utc)
+    rows = [
+        {"run_id": run_id, "partition_id": b, "conv_bucket": b,
+         "rows": vals[f"rows_{b}"], "bytes": vals[f"bytes_{b}"],
+         "failures": vals[f"fails_{b}"], "status": "committed",
+         "started_at": started_at, "finished_at": finished_at}
+        for b in todo
+        if vals[f"rows_{b}"]
     ]
-    n_new = len(lineage_rows)
-    if n_new == 0:
+    if not rows:
         catalog.discard_staged(data_snap)
-    else:
-        if audit_sample > 0:
-            # sampled audit of the STAGED (not yet visible) snapshot:
-            # prove the files are readable with the expected schema before
-            # anything publishes — partition-pruned + LIMITed, a handful
-            # of rows, not a table scan
-            new_buckets = [r[2] for r in lineage_rows]
-            audited = (
-                spark.read.parquet(os.path.join(catalog.warehouse, data_snap))
-                .filter(F.col("conv_bucket").isin(new_buckets))
-                .select("conv_id", "turn_idx", "extracted_text", "error")
-                .limit(audit_sample)
-                .count()
-            )
-            if audited == 0:
-                catalog.discard_staged(data_snap)
-                raise RuntimeError(
-                    f"write audit failed: {n_new} buckets staged but the "
-                    f"staged output has no readable rows; nothing published"
-                )
-        lineage_snap = catalog.stage_append(
-            spark.createDataFrame(lineage_rows, LINEAGE_SCHEMA), lineage_table
+        return summary
+    snap_dir = os.path.join(catalog.warehouse, data_snap)
+    bad = _footer_mismatches(snap_dir, rows) if audit_sample > 0 else {}
+    if bad:
+        catalog.discard_staged(data_snap)
+        raise RuntimeError(
+            "write audit failed: staged footer rows != observed rows "
+            f"(bucket: (staged, observed)) {bad}; nothing published"
         )
-        catalog.commit({output_table: data_snap, lineage_table: lineage_snap})
-    lineage = catalog.read(lineage_table) if catalog.exists(lineage_table) else None
-    totals = (
-        lineage.agg(F.sum("rows").alias("r"), F.sum("failures").alias("f")).first()
-        if lineage is not None
-        else None
+    lineage_snap = catalog.stage_append(
+        pa.Table.from_pylist(rows, schema=_LINEAGE_ARROW), lineage_table
     )
-    return {
-        "run_id": run_id,
-        "processed_buckets": n_new,
-        "skipped_buckets": len(committed),
-        "orphans_dropped": orphans,
-        "total_rows": totals.r if totals else 0,
-        "total_failures": totals.f if totals else 0,
-    }
+    catalog.commit({output_table: data_snap, lineage_table: lineage_snap})
+    summary["processed_buckets"] = len(rows)
+    summary["total_rows"] += sum(r["rows"] for r in rows)
+    summary["total_failures"] += sum(r["failures"] for r in rows)
+    return summary

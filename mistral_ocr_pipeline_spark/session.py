@@ -12,6 +12,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half the host's physical RAM, capped at 48g: a heap sized for a
+    large host would overcommit a small one."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return f"{min(half_mb, 48 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "mistral_ocr_pipeline_spark",
     cores: int | str | None = None,
@@ -34,7 +41,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # MB-scale HTML payloads: bound Arrow batch memory (SURVEY §7.4.4)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
         # InferFiltersFromGenerate synthesizes size(arr)>0 && isnotnull(arr)

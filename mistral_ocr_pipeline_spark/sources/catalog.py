@@ -61,6 +61,8 @@ import shutil
 import time
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 _MANIFEST_DIR = "_manifests"
@@ -273,23 +275,37 @@ class TableCatalog:
 
     # -- staged writes -----------------------------------------------------
     def stage_overwrite(
-        self, df: DataFrame, table: str, partition_by: list[str] | None = None
+        self,
+        df: DataFrame | pa.Table,
+        table: str,
+        partition_by: list[str] | None = None,
     ) -> str:
         """Write ``df`` into a NEW unreferenced snapshot dir; returns the
         snapshot relpath for ``commit``.  Invisible to readers until
-        committed."""
+        committed.  A ``pyarrow.Table`` (rows already in driver memory,
+        e.g. lineage) is written as one Parquet file, without Spark."""
         snap = f"snap-{uuid.uuid4().hex}"
         base = self.current_tables().get(table)
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(os.path.join(self.path(table), snap))
+        snap_dir = os.path.join(self.path(table), snap)
+        if isinstance(df, pa.Table):
+            if partition_by:
+                raise ValueError("partition_by needs a Spark DataFrame")
+            os.makedirs(snap_dir)
+            pq.write_table(df, os.path.join(snap_dir, f"part-{uuid.uuid4()}.parquet"))
+        else:
+            w = df.write.mode("overwrite")
+            if partition_by:
+                w = w.partitionBy(*partition_by)
+            w.parquet(snap_dir)
         rel = f"{table}/{snap}"
         self._staged_bases[rel] = base
         return rel
 
     def stage_append(
-        self, df: DataFrame, table: str, partition_by: list[str] | None = None
+        self,
+        df: DataFrame | pa.Table,
+        table: str,
+        partition_by: list[str] | None = None,
     ) -> str:
         """Stage ``df`` plus the current snapshot's files (hardlinked —
         metadata-only, the Iceberg manifest-reuse analog) as a new

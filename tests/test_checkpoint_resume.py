@@ -3,7 +3,10 @@ commit → rerun → identical final table, zero recomputation of committed
 buckets, lineage metrics recorded per partition."""
 
 import os
+import time
+from datetime import timedelta
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -144,6 +147,142 @@ def test_idempotent_rerun_noop(spark, tmp_path, input_df):
     s = run_extraction(spark, cat, input_df, run_id="r2", n_buckets=N_BUCKETS)
     assert s["processed_buckets"] == 0
     assert _sorted_rows(cat.read("extracted")) == before
+
+
+def _jobs_launched(spark, tag, fn):
+    """Run ``fn`` under Spark job group ``tag``; return its result and the
+    number of Spark jobs it launched.  Listener events reach the status
+    tracker asynchronously but in order, so once a later marker job is
+    visible, every job ``fn`` launched is too."""
+    sc = spark.sparkContext
+    sc.setJobGroup(tag, tag)
+    try:
+        out = fn()
+        sc.setJobGroup(f"{tag}-marker", "marker")
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(f"{tag}-marker"):
+        assert time.monotonic() < deadline, "marker job never reached the tracker"
+        time.sleep(0.05)
+    return out, len(tracker.getJobIdsForGroup(tag))
+
+
+def test_run_extraction_job_budget(spark, tmp_path, input_df):
+    """The staged output write is a run's only Spark job (two when
+    extract_transcripts takes its salted shuffle): lineage is read and
+    written on the driver, the audit reads footers, totals are computed.
+    A rerun with nothing left to do launches no job at all."""
+    n_nonempty = (
+        with_conv_bucket(input_df, N_BUCKETS).select("conv_bucket").distinct().count()
+    )
+    assert n_nonempty == N_BUCKETS  # else the noop rerun would still scan
+    cat = TableCatalog(spark, str(tmp_path / "wh_jobs"))
+    first_half = set(range(N_BUCKETS // 2))
+    runs = {}
+    for tag, kw in (
+        ("killed", {"only_buckets": first_half}),
+        ("resume", {}),
+        ("noop", {}),
+    ):
+        runs[tag] = _jobs_launched(
+            spark,
+            f"job-budget-{tag}-{tmp_path.name}",
+            lambda: run_extraction(
+                spark, cat, input_df, run_id=tag, n_buckets=N_BUCKETS, **kw
+            ),
+        )
+    (killed, n_killed), (resumed, n_resumed), (noop, n_noop) = runs.values()
+    assert killed["processed_buckets"] == len(first_half) and n_killed in (1, 2)
+    assert resumed["processed_buckets"] == N_BUCKETS - len(first_half)
+    assert n_resumed in (1, 2)
+    assert noop["processed_buckets"] == 0 and n_noop == 0
+    # the computed totals agree with what was published
+    assert noop["total_rows"] == resumed["total_rows"] == cat.read("extracted").count()
+    assert noop["total_failures"] == resumed["total_failures"]
+
+
+class _ShortWriteCatalog(TableCatalog):
+    """Loses one staged output file of a bucket this run is writing, after
+    the write and before the audit: a short write the old sampled
+    read-back (``limit(n).count() > 0``) could not see."""
+
+    def __init__(self, spark, warehouse, new_buckets):
+        super().__init__(spark, warehouse)
+        self.new_buckets = new_buckets
+        self.snapshots_staged = []
+
+    def stage_append(self, df, table, partition_by=None):
+        rel = super().stage_append(df, table, partition_by)
+        self.snapshots_staged.append(rel)
+        if table == "extracted":
+            b = min(self.new_buckets)
+            bucket_dir = os.path.join(self.warehouse, rel, f"conv_bucket={b}")
+            victim = sorted(f for f in os.listdir(bucket_dir) if f.endswith(".parquet"))[0]
+            os.remove(os.path.join(bucket_dir, victim))
+        return rel
+
+
+def test_footer_audit_rejects_short_write(spark, tmp_path, input_df):
+    wh = str(tmp_path / "wh_short")
+    cat = TableCatalog(spark, wh)
+    first_half = set(range(N_BUCKETS // 2))
+    run_extraction(
+        spark, cat, input_df, run_id="r1", n_buckets=N_BUCKETS, only_buckets=first_half
+    )
+    head = open(os.path.join(wh, "_HEAD")).read()
+    tables = cat.current_tables()
+
+    short = _ShortWriteCatalog(spark, wh, set(range(N_BUCKETS)) - first_half)
+    with pytest.raises(RuntimeError, match="write audit failed"):
+        run_extraction(spark, short, input_df, run_id="r2", n_buckets=N_BUCKETS)
+
+    assert open(os.path.join(wh, "_HEAD")).read() == head
+    assert cat.current_tables() == tables
+    assert committed_buckets(cat, "run_partitions") == first_half
+    # the data snapshot was staged, then discarded; lineage was never staged
+    assert len(short.snapshots_staged) == 1
+    assert not os.path.exists(os.path.join(wh, short.snapshots_staged[0]))
+
+
+def test_pyarrow_lineage_appends_to_spark_written_lineage(spark, tmp_path, input_df):
+    """Existing warehouses hold Spark-written lineage (INT96 timestamps);
+    run_extraction now appends pyarrow-written rows (INT64 timestamps,
+    UTC-adjusted).  The mixed table must still read as LINEAGE_SCHEMA and
+    resume must see both runs' buckets."""
+    from mistral_ocr_pipeline_spark.checkpoint.lineage import LINEAGE_SCHEMA
+
+    cat = TableCatalog(spark, str(tmp_path / "wh_mixed"))
+    first_half = set(range(N_BUCKETS // 2))
+    run_extraction(
+        spark, cat, input_df, run_id="r1", n_buckets=N_BUCKETS, only_buckets=first_half
+    )
+    # rewrite the lineage through Spark, as every pre-existing warehouse has it
+    cat.overwrite(cat.read("run_partitions").coalesce(1), "run_partitions")
+    (spark_file,) = [
+        f for f in os.listdir(cat.data_path("run_partitions")) if f.endswith(".parquet")
+    ]
+    spark_schema = pq.ParquetFile(
+        os.path.join(cat.data_path("run_partitions"), spark_file)
+    ).schema
+    assert spark_schema.column(spark_schema.names.index("started_at")).physical_type == "INT96"
+
+    s = run_extraction(spark, cat, input_df, run_id="r2", n_buckets=N_BUCKETS)
+    assert s["skipped_buckets"] == len(first_half)
+    assert s["processed_buckets"] == N_BUCKETS - len(first_half)
+
+    lineage = cat.read("run_partitions")
+    assert [f.dataType for f in lineage.schema] == [f.dataType for f in LINEAGE_SCHEMA]
+    assert lineage.columns == LINEAGE_SCHEMA.names
+    assert committed_buckets(cat, "run_partitions") == set(range(N_BUCKETS))
+    rows = lineage.collect()
+    assert {r.run_id for r in rows} == {"r1", "r2"}
+    # both encodings decode to the same clock: no unit or timezone skew
+    times = [t for r in rows for t in (r.started_at, r.finished_at)]
+    assert None not in times and max(times) - min(times) < timedelta(minutes=10)
+    assert sum(r.rows for r in rows) == s["total_rows"] == cat.read("extracted").count()
 
 
 def test_single_commit_kill_shows_both_or_neither(spark, tmp_path, input_df):

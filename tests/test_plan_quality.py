@@ -64,8 +64,10 @@ class TestScanPruning:
 
 class TestJoinStrategies:
     def test_resume_anti_join_broadcasts(self, spark, docs):
-        # the J1 shape from checkpoint.lineage.run_extraction: committed
-        # bucket keys (one row per bucket) broadcast against the scan
+        # the J1 resume anti-join shape (SURVEY §2.4, the registry's
+        # j1_resume_anti_join): a tiny key set, one row per bucket,
+        # broadcast against the scan.  run_extraction needs no join: it
+        # filters with isin over the buckets still to do
         from mistral_ocr_pipeline_spark.checkpoint.lineage import with_conv_bucket
 
         src = with_conv_bucket(
