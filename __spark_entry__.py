@@ -1,7 +1,7 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` runs the flagship extraction pipeline (transcripts →
-salted repartition → mapInPandas extraction → stable-ordering window) on
+salted repartition → mapInArrow extraction → stable-ordering window) on
 sf0.001.  ``queries()`` exposes every implemented operator from
 SURVEY.md §2 (plus the training-data ops battery); ``oracle_sql()`` gives
 the DuckDB twin for each SQL-expressible one — column names/types and

@@ -6,8 +6,11 @@ with NFC unicode normalization pinned so that byte-equality between the
 Spark engine and the pure-Python oracle is well-defined (SURVEY.md §7.4.1).
 
 The *plain* payload normalization is intentionally expressible in ANSI SQL
-(``trim(regexp_replace(nfc_normalize(text), '\\s+', ' ', 'g'))``) so the
-DuckDB oracle can verify the plain extraction path end-to-end.
+(``trim(regexp_replace(nfc_normalize(text), '[ \\t\\n\\v\\f\\r]+', ' ', 'g'),
+' ')``) so the DuckDB oracle can verify the plain extraction path
+end-to-end.  The class is spelled out because RE2's ``\\s`` does not match
+``\\v``, and ``trim`` names ``' '`` because DuckDB's one-argument ``trim``
+also strips Unicode spaces such as NBSP.
 """
 
 from __future__ import annotations
@@ -15,8 +18,9 @@ from __future__ import annotations
 import re
 import unicodedata
 
-# ASCII whitespace only ([ \t\n\r\f\v]) — matches RE2's `\s` (DuckDB) and
-# Java's `\s` (Spark rlike/regexp_replace), so the SQL oracle is exact.
+# ASCII whitespace only ([ \t\n\r\f\v]) — the set Java's `\s` matches (Spark
+# rlike/regexp_replace).  RE2's `\s` (DuckDB) omits `\v`, so the DuckDB twin
+# spells the class out as `[ \t\n\v\f\r]` to stay exact.
 # Unicode spaces (NBSP, ideographic space) are intentionally NOT collapsed.
 _WS_RUN = re.compile(r"\s+", re.ASCII)
 # fast-path detector: any non-space ASCII whitespace or a double space means
@@ -44,14 +48,14 @@ def collapse_ws(s: str) -> str:
     space and strip — the reference's C3 normalization."""
     if _WS_NEEDS_COLLAPSE.search(s) is None:  # already single-spaced: one C scan
         return s.strip(" ")
-    return _WS_RUN.sub(" ", s).strip(" ")  # post-collapse edges are ' ' only; ASCII strip matches SQL trim()
+    return _WS_RUN.sub(" ", s).strip(" ")  # post-collapse edges are ' ' only; matches SQL trim(x, ' ')
 
 
 def normalize_plain(s: str) -> str:
     """Extraction for the *plain* payload family: NFC → collapse ws → strip.
 
     SQL-oracle equivalent (DuckDB):
-    ``trim(regexp_replace(nfc_normalize(text), '\\s+', ' ', 'g'))``
+    ``trim(regexp_replace(nfc_normalize(text), '[ \\t\\n\\v\\f\\r]+', ' ', 'g'), ' ')``
     """
     return collapse_ws(nfc(s))
 

@@ -67,8 +67,12 @@ def transcripts_from_documents(docs: DataFrame) -> DataFrame:
     )
 
 
-# normalized plain text, shared SQL fragment (engine: extractors.textnorm)
-_NORM = "trim(regexp_replace(nfc_normalize({c}), '\\s+', ' ', 'g'))"
+# normalized plain text, shared SQL fragment (engine: extractors.textnorm).
+# The kernel collapses ASCII whitespace and strips only ' ': RE2's \s leaves
+# \v alone, and one-argument trim() also strips Unicode spaces such as NBSP.
+_NORM = (
+    "trim(regexp_replace(nfc_normalize({c}), '[ \\t\\n\\v\\f\\r]+', ' ', 'g'), ' ')"
+)
 # matching key (functions.text_functions.norm_key_col)
 _KEY = (
     "trim(regexp_replace(regexp_replace(lower({c}), '[^\\w\\s/\\-]', '', 'g'),"
@@ -92,7 +96,7 @@ _KEY = (
     """,
 )
 def flagship_extract_plain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """transcripts → salted repartition → mapInPandas extraction → W6 window.
+    """transcripts → salted repartition → mapInArrow extraction → W6 window.
 
     The documents corpus is plain prose, so the whole engine path (dispatch,
     normalization, span/md assembly) is replayable as SQL — the one
@@ -11614,7 +11618,7 @@ def warc_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The north-star path end to end from the archive surface: WARC
     files (HTML pages behind HTTP headers, every 7th record a request)
     → `parse_warc_records` framing walk → intact responses → HTTP
-    header strip → the REAL mapInPandas DOM extractor
+    header strip → the REAL mapInArrow DOM extractor
     (`extract_transcripts`, the same boilerplate classifier
     `extract_html_boilerplate` certifies) → per-page text + markdown,
     with the target URI carried from the WARC headers.  One plan:

@@ -1,13 +1,14 @@
 """The flagship Spark job: transcripts → per-turn extraction.
 
 Spark shape (SURVEY.md §3.1): ``scan(transcripts) → salted repartition →
-mapInPandas(extract) → [ordering window where order matters] → sink``.
+mapInArrow(extract) → [ordering window where order matters] → sink``.
 
 Design points, per the north rule:
 
 * **No per-row Python in Spark's pipeline** — extraction runs inside one
-  Arrow-batched ``mapInPandas`` stage; the per-document loops live inside
-  the extractor batch (same contract as lxml/NumPy inner loops).
+  ``mapInArrow`` stage: ``pyarrow.RecordBatch`` in, ``RecordBatch`` out,
+  no pandas in between; the per-document loops live inside the extractor
+  batch (same contract as lxml/NumPy inner loops).
 * **conv_id-salted repartitioning** defuses long-conversation skew: each
   turn is independent (the reference re-sorts after unordered completion,
   main.py:203-209, so per-turn parallelism is semantics-preserving), and
@@ -22,8 +23,10 @@ from __future__ import annotations
 
 from collections.abc import Iterator, Iterable
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from mistral_ocr_pipeline_spark.extractors.dispatch import extract_turn
 
@@ -74,32 +77,34 @@ def salted_repartition(
 
 MAX_BATCH_PAYLOAD_BYTES = 64 * 1024 * 1024
 
+_PASS_THROUGH = ("conv_id", "turn_idx", "role", "ts")
+_RESULT_FIELDS = [
+    f for f in to_arrow_schema(EXTRACT_OUTPUT_SCHEMA) if f.name not in _PASS_THROUGH
+]
 
-def _byte_bounded(pdf: pd.DataFrame, budget: int) -> Iterator[pd.DataFrame]:
+
+def _byte_bounded(batch: pa.RecordBatch, budget: int) -> Iterator[pa.RecordBatch]:
     """Split one incoming batch into slices whose summed payload size stays
     under ``budget`` bytes (SURVEY §7.4.4): Arrow's maxRecordsPerBatch
     bounds ROWS, but 2048 rows of MB-scale HTML is gigabytes of strings
-    held live while the output frame builds.  Length estimation is two
-    vectorized str.len passes — no per-row Python."""
-    # str.len() over object dtype yields object; make the dtype explicit
-    # BEFORE fillna (object-fillna downcasting is deprecated and flips
-    # behavior in pandas 3)
-    sizes = (
-        pdf["text"].str.len().astype("float64").fillna(0.0)
-        + pdf["tool"].str.len().astype("float64").fillna(0.0)
-    ).to_numpy()
-    if sizes.sum() <= budget:
-        yield pdf
+    held live while the output batch builds.  Sizes are UTF-8 byte lengths
+    from two ``binary_length`` kernels; slices are zero-copy views."""
+    sizes = pc.add(
+        pc.binary_length(batch["text"]).fill_null(0).cast(pa.int64()),
+        pc.binary_length(batch["tool"]).fill_null(0).cast(pa.int64()),
+    )
+    if (pc.sum(sizes).as_py() or 0) <= budget:
+        yield batch
         return
     start = 0
     acc = 0
-    for i, sz in enumerate(sizes):
+    for i, sz in enumerate(sizes.to_pylist()):
         if acc and acc + sz > budget:
-            yield pdf.iloc[start:i]
+            yield batch.slice(start, i - start)
             start, acc = i, 0
         acc += sz
-    if start < len(pdf):
-        yield pdf.iloc[start:]
+    if start < batch.num_rows:
+        yield batch.slice(start)
 
 
 def _make_extract_batches(budget: int):
@@ -107,7 +112,9 @@ def _make_extract_batches(budget: int):
     with the UDF and reaches executor workers (a module-level constant
     would be re-imported fresh there)."""
 
-    def _extract_batches(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _extract_batches(
+        batches: Iterable[pa.RecordBatch],
+    ) -> Iterator[pa.RecordBatch]:
         for incoming in batches:
             for piece in _byte_bounded(incoming, budget):
                 yield _extract_one(piece)
@@ -115,39 +122,17 @@ def _make_extract_batches(budget: int):
     return _extract_batches
 
 
-def _extract_one(pdf: pd.DataFrame) -> pd.DataFrame:
+def _extract_one(batch: pa.RecordBatch) -> pa.RecordBatch:
     # Per-row dispatch is the MEASURED optimum here, not an oversight.
-    # Profiled r3 (cProfile, 2k pdf_layout turns): _page_lines 47%,
-    # routing+json.loads ~15% — the layout kernel dominates, not dispatch.
-    # A vectorized pre-route (pandas str.contains sniff + str.replace
-    # normalize for the plain family) measured 3.5× SLOWER than this loop
-    # at 50k plain rows: object-dtype pandas str ops pay per-row Python
-    # anyway, while extract_turn's scalar fast paths (_WS_NEEDS_COLLAPSE
-    # single C scan, html sniff short-circuit) do less work per row.
-    #
-    # nulls arrive as None or NaN depending on the Arrow→pandas path;
-    # pin to None so the dispatcher's contract holds
-    texts = [t if isinstance(t, str) else None for t in pdf["text"]]
-    tools = [t if isinstance(t, str) else None for t in pdf["tool"]]
-    recs = [extract_turn(t, tl) for t, tl in zip(texts, tools)]
-    return pd.DataFrame(
-        {
-            "conv_id": pdf["conv_id"].values,
-            "turn_idx": pdf["turn_idx"].values,
-            "role": pdf["role"].values,
-            "ts": pdf["ts"].values,
-            "payload_kind": [r["payload_kind"] for r in recs],
-            "extracted_text": [r["extracted_text"] for r in recs],
-            "spans": [
-                [
-                    {"start": s[0], "end": s[1], "kind": s[2], "ref": s[3]}
-                    for s in r["spans"]
-                ]
-                for r in recs
-            ],
-            "md": [r["md"] for r in recs],
-            "error": [r["error"] for r in recs],
-        }
+    # to_pylist() gives None for nulls, as the dispatcher expects, and
+    # pa.array takes the kernel's span tuples as struct values.
+    recs = list(
+        map(extract_turn, batch["text"].to_pylist(), batch["tool"].to_pylist())
+    )
+    return pa.RecordBatch.from_arrays(
+        [batch[c] for c in _PASS_THROUGH]
+        + [pa.array([r[f.name] for r in recs], f.type) for f in _RESULT_FIELDS],
+        names=EXTRACT_OUTPUT_SCHEMA.names,
     )
 
 
@@ -172,15 +157,15 @@ def extract_transcripts(
       * ``True`` — always shuffle (explicitly skewed sources).
       * ``False`` — never shuffle.
 
-    Null-handling: nulls are pinned to None before dispatch (Arrow delivers
-    None for string nulls; NaN can appear via pandas paths)."""
+    Null ``text``/``tool`` reach the dispatcher as None; ``role`` and ``ts``
+    pass through the Arrow stage unchanged."""
     src = df.select("conv_id", "turn_idx", "role", "text", "tool", "ts")
     if repartition == "auto":
         target = src.sparkSession.sparkContext.defaultParallelism
         repartition = src.rdd.getNumPartitions() < target
     if repartition:
         src = salted_repartition(src, num_partitions, n_salts)
-    return src.mapInPandas(
+    return src.mapInArrow(
         _make_extract_batches(max_batch_payload_bytes), EXTRACT_OUTPUT_SCHEMA
     )
 

@@ -23,11 +23,14 @@ skipping bytes would corrupt every later offset.
 `cdx_index` derives the classic CDX lookup columns (url, file, byte
 offset, record length, body digest) from response records — the index
 a refetch-free corpus reprocessor or a wayback-style reader actually
-serves from."""
+serves from; `warc_pages` runs the same records' HTTP payloads through
+the extraction stage (the batch and streaming ingests both use it)."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from mistral_ocr_pipeline_spark.plans.extract_pipeline import extract_transcripts
 
 _SEP = r"\r\n\r\n"
 _FRAME_T = "array<struct<off:int,hend:int,clen:int>>"
@@ -140,6 +143,48 @@ def cdx_index(records: DataFrame) -> DataFrame:
         "offset",
         F.col("content_length").alias("length"),
         "digest",
+    )
+
+
+def warc_pages(records: DataFrame) -> DataFrame:
+    """Extracted pages from parsed records (``keep_body=True``): one row
+    per intact ``response`` record — (file_id, rec_idx, payload_kind,
+    extracted_text, md, error, target_uri).  The HTTP headers are cut at
+    the first blank line and the payload runs through
+    `extract_transcripts` as a one-turn conversation keyed
+    ``file_id || '#' || rec_idx``; the result joins back on that key, so
+    ``file_id`` keeps its own type (a WARC filename as well as a number)."""
+    resp = records.filter(
+        (F.col("warc_type") == "response") & ~F.col("truncated")
+    ).select(
+        F.concat(
+            F.col("file_id").cast("string"),
+            F.lit("#"),
+            F.col("rec_idx").cast("string"),
+        ).alias("conv_id"),
+        "file_id",
+        "rec_idx",
+        "target_uri",
+        F.expr(
+            "CASE WHEN locate('\\r\\n\\r\\n', body) = 0 THEN body "
+            "ELSE substring(body, locate('\\r\\n\\r\\n', body) + 4) END"
+        ).alias("payload"),
+    )
+    turns = resp.select(
+        "conv_id",
+        F.lit(0).cast("int").alias("turn_idx"),
+        F.lit("user").alias("role"),
+        F.col("payload").alias("text"),
+        F.lit(None).cast("string").alias("tool"),
+        F.lit(None).cast("timestamp").alias("ts"),
+    )
+    return (
+        extract_transcripts(turns)
+        .join(resp.select("conv_id", "file_id", "rec_idx", "target_uri"), "conv_id")
+        .select(
+            "file_id", "rec_idx", "payload_kind", "extracted_text", "md",
+            "error", "target_uri",
+        )
     )
 
 

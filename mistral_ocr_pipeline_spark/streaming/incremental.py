@@ -6,7 +6,7 @@ one-row-at-a-time appends, resume-after-kill without recompute
 file-source stream over the transcripts directory with AvailableNow
 semantics: each run drains exactly the files not yet processed (the
 streaming checkpoint replaces the CSV resume index), extracts per
-micro-batch via the same mapInPandas pipeline, and appends output +
+micro-batch via the same mapInArrow pipeline, and appends output +
 per-batch lineage metrics inside ``foreachBatch``.
 
 Killed run → next run resumes from the checkpoint offsets; already-drained

@@ -21,6 +21,7 @@ from mistral_ocr_pipeline_spark.sources.catalog import TableCatalog
 from mistral_ocr_pipeline_spark.sources.warc import (
     cdx_index,
     parse_warc_records,
+    warc_pages,
 )
 from mistral_ocr_pipeline_spark.streaming.identity import stream_identity
 
@@ -64,52 +65,9 @@ def run_warc_ingest(
             lineage_table: catalog.stage_append(lineage, lineage_table),
         }
         if extract:
-            from mistral_ocr_pipeline_spark.plans.extract_pipeline import (
-                extract_transcripts,
+            staged[pages_table] = catalog.stage_append(
+                warc_pages(recs), pages_table
             )
-
-            resp = recs.filter(
-                (F.col("warc_type") == "response") & ~F.col("truncated")
-            ).select(
-                "file_id",
-                "rec_idx",
-                "target_uri",
-                F.expr(
-                    "CASE WHEN locate('\\r\\n\\r\\n', body) = 0 THEN body "
-                    "ELSE substring(body, locate('\\r\\n\\r\\n', body) + 4)"
-                    " END"
-                ).alias("payload"),
-            )
-            t = resp.select(
-                F.concat(
-                    F.col("file_id").cast("string"),
-                    F.lit("#"),
-                    F.col("rec_idx").cast("string"),
-                ).alias("conv_id"),
-                F.lit(0).cast("int").alias("turn_idx"),
-                F.lit("user").alias("role"),
-                F.col("payload").alias("text"),
-                F.lit(None).cast("string").alias("tool"),
-                F.lit(None).cast("timestamp").alias("ts"),
-            )
-            pages = (
-                extract_transcripts(t)
-                .select(
-                    F.split(F.col("conv_id"), "#").getItem(0).cast("long")
-                    .alias("file_id"),
-                    F.split(F.col("conv_id"), "#").getItem(1).cast("int")
-                    .alias("rec_idx"),
-                    "payload_kind",
-                    "extracted_text",
-                    "md",
-                    "error",
-                )
-                .join(
-                    resp.select("file_id", "rec_idx", "target_uri"),
-                    ["file_id", "rec_idx"],
-                )
-            )
-            staged[pages_table] = catalog.stage_append(pages, pages_table)
         catalog.commit(staged)
 
     q = (

@@ -5,7 +5,7 @@ Each batch of WARC files (parquet of ``file_id, warc`` — files decoded
 latin-1 per the `sources/warc.py` byte↔char contract) is walked by the
 map-only framing fold; the CDX lookup rows append to the ``cdx`` table
 and, with ``--extract``, every intact response's HTTP payload runs
-through the mapInPandas DOM extractor and the per-page text/markdown
+through the mapInArrow DOM extractor and the per-page text/markdown
 appends to ``pages``.  CDX, pages, and lineage publish in ONE atomic
 catalog commit.
 
@@ -51,6 +51,7 @@ def main() -> None:
     from mistral_ocr_pipeline_spark.sources.warc import (
         cdx_index,
         parse_warc_records,
+        warc_pages,
     )
 
     catalog = TableCatalog(spark, args.warehouse)
@@ -87,48 +88,7 @@ def main() -> None:
     }
     n_pages = 0
     if args.extract:
-        from mistral_ocr_pipeline_spark.plans.extract_pipeline import (
-            extract_transcripts,
-        )
-
-        resp = recs.filter(
-            (F.col("warc_type") == "response") & ~F.col("truncated")
-        ).select(
-            "file_id",
-            "rec_idx",
-            "target_uri",
-            F.expr(
-                "CASE WHEN locate('\\r\\n\\r\\n', body) = 0 THEN body "
-                "ELSE substring(body, locate('\\r\\n\\r\\n', body) + 4) END"
-            ).alias("payload"),
-        )
-        t = resp.select(
-            F.concat(F.col("file_id").cast("string"), F.lit("#"),
-                     F.col("rec_idx").cast("string")).alias("conv_id"),
-            F.lit(0).cast("int").alias("turn_idx"),
-            F.lit("user").alias("role"),
-            F.col("payload").alias("text"),
-            F.lit(None).cast("string").alias("tool"),
-            F.lit(None).cast("timestamp").alias("ts"),
-        )
-        pages = (
-            extract_transcripts(t)
-            .select(
-                F.split(F.col("conv_id"), "#").getItem(0).cast("long")
-                .alias("file_id"),
-                F.split(F.col("conv_id"), "#").getItem(1).cast("int")
-                .alias("rec_idx"),
-                "payload_kind",
-                "extracted_text",
-                "md",
-                "error",
-            )
-            .join(
-                resp.select("file_id", "rec_idx", "target_uri"),
-                ["file_id", "rec_idx"],
-            )
-        )
-        pages = pages.localCheckpoint(eager=True)
+        pages = warc_pages(recs).localCheckpoint(eager=True)
         n_pages = pages.count()
         staged["pages"] = catalog.stage_append(pages, "pages")
     catalog.commit(staged)

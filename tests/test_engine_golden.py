@@ -110,27 +110,30 @@ class TestConversationAssembly:
 
 class TestByteBoundedRebatch:
     def test_split_preserves_rows_and_bounds(self, spark):
-        import pandas as pd
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
         from mistral_ocr_pipeline_spark.plans import extract_pipeline as ep
 
-        pdf = pd.DataFrame(
+        batch = pa.RecordBatch.from_pydict(
             {
                 "conv_id": [f"c{i}" for i in range(10)],
-                "turn_idx": list(range(10)),
+                "turn_idx": pa.array(range(10), pa.int32()),
                 "role": ["u"] * 10,
                 "text": ["x" * 3_000_000] * 9 + [None],  # 27 MB total + null
-                "tool": [None] * 10,
-                "ts": [None] * 10,
+                "tool": pa.array([None] * 10, pa.string()),
+                "ts": pa.array([None] * 10, pa.timestamp("us", tz="UTC")),
             }
         )
-        slices = list(ep._byte_bounded(pdf, 10_000_000))
+        slices = list(ep._byte_bounded(batch, 10_000_000))
         # rows preserved in order, each slice under budget (or single row)
-        assert sum(len(s) for s in slices) == 10 and len(slices) >= 3
-        assert [c for s in slices for c in s["conv_id"]] == list(pdf["conv_id"])
+        assert sum(s.num_rows for s in slices) == 10 and len(slices) >= 3
+        assert [c for s in slices for c in s.column("conv_id").to_pylist()] == (
+            batch.column("conv_id").to_pylist()
+        )
         for s in slices:
-            payload = s["text"].str.len().fillna(0).sum()
-            assert payload <= 10_000_000 or len(s) == 1
+            payload = pc.sum(pc.binary_length(s.column("text"))).as_py() or 0
+            assert payload <= 10_000_000 or s.num_rows == 1
 
     def test_extraction_output_independent_of_budget(self, spark):
         from pyspark.sql import functions as F
@@ -155,3 +158,77 @@ class TestByteBoundedRebatch:
             ).collect()
         }
         assert big == small and len(big) == 50
+
+
+class TestArrowBoundary:
+    """The extraction stage hands ``role`` and ``ts`` back exactly as they
+    came in and feeds null payloads to the dispatcher as None."""
+
+    ROWS = [
+        # conv_id, turn_idx, role, text, tool, unix micros of ts
+        ("c0", 0, "user", "hello  world", None, 1_710_052_200_123_456),
+        ("c0", 1, None, None, None, None),
+        ("c1", 0, "assistant", None, '{"kind": "other"}', 1_710_000_000_000_001),
+        ("c1", 1, "tool", "<p>x</p>", "[}", -1),
+        ("c2", 0, "", "  ", None, 0),
+    ]
+    KINDS = {
+        ("c0", 0): "plain", ("c0", 1): "empty", ("c1", 0): "empty",
+        ("c1", 1): "error", ("c2", 0): "empty",
+    }
+
+    def test_pass_through_columns_and_null_payloads(self, spark):
+        from pyspark.sql import functions as F
+
+        from mistral_ocr_pipeline_spark.plans.extract_pipeline import (
+            extract_transcripts,
+        )
+
+        key = "spark.sql.session.timeZone"
+        prior = spark.conf.get(key)
+        try:
+            for tz in (prior, "America/New_York"):
+                spark.conf.set(key, tz)
+                src = spark.createDataFrame(
+                    self.ROWS,
+                    "conv_id string, turn_idx int, role string, text string, "
+                    "tool string, us long",
+                ).withColumn("ts", F.expr("timestamp_micros(us)"))
+                want = {
+                    (r.conv_id, r.turn_idx): (r.role, r.ts, r.us)
+                    for r in src.collect()
+                }
+                for repartition in (True, False):
+                    out = extract_transcripts(src, repartition=repartition)
+                    got = out.withColumn("us", F.expr("unix_micros(ts)")).collect()
+                    assert {
+                        (r.conv_id, r.turn_idx): (r.role, r.ts, r.us) for r in got
+                    } == want, (tz, repartition)
+                    assert {
+                        (r.conv_id, r.turn_idx): r.payload_kind for r in got
+                    } == self.KINDS
+                    empty = extract_transcripts(
+                        src.filter(F.lit(False)), repartition=repartition
+                    )
+                    assert empty.collect() == []
+        finally:
+            spark.conf.set(key, prior)
+
+    def test_zero_row_batch(self):
+        import pyarrow as pa
+
+        from mistral_ocr_pipeline_spark.plans import extract_pipeline as ep
+
+        batch = pa.RecordBatch.from_pydict(
+            {
+                "conv_id": pa.array([], pa.string()),
+                "turn_idx": pa.array([], pa.int32()),
+                "role": pa.array([], pa.string()),
+                "text": pa.array([], pa.string()),
+                "tool": pa.array([], pa.string()),
+                "ts": pa.array([], pa.timestamp("us", tz="UTC")),
+            }
+        )
+        out = ep._extract_one(batch)
+        assert out.num_rows == 0
+        assert out.schema.names == ep.EXTRACT_OUTPUT_SCHEMA.names

@@ -318,6 +318,25 @@ class TestScalars:
             ).fetchone()[0]
             assert got == normalize_plain(s), repr(s)
 
+    def test_norm_twin_matches_normalize_plain(self):
+        """The registry's DuckDB twin of the plain path (``_NORM``) agrees
+        with ``normalize_plain`` on every ASCII whitespace character,
+        including ``\\v``, which RE2's ``\\s`` does not match, and on the
+        Unicode cases it must leave alone or compose."""
+        import duckdb
+
+        from mistral_ocr_pipeline_spark.plans.entry_queries import _NORM
+
+        samples = [
+            "a\x0bb c", "\x0b", " x\x0b", "a\x0cb", "line\r\nnext\r\n",
+            "tab\there\x0b\x0c\r\n end", "nb\u00a0sp \u00a0", "\u00a0",
+            "cafe\u0301", "caf\u00e9\u0301", "\u212b A\u030a \u00c5\u030a",
+        ]
+        sql = "select " + _NORM.format(c="?")
+        for s in samples:
+            got = duckdb.sql(sql, params=[s]).fetchone()[0]
+            assert got == normalize_plain(s), repr(s)
+
 
 class TestAdversarialPipeline:
     def test_hostile_payloads_complete_quickly_in_spark(self, spark):

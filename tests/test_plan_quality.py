@@ -9,7 +9,7 @@ the PLANS stay the plans we engineered for 100 TB:
   the Catalyst pitfall where a filter on a UDF output is pushed through an
   exchange by duplicating the ArrowEvalPython below it (observed: the
   whole simhash ran twice, once on the unsplit pre-shuffle partition),
-* extraction stays a single narrow mapInPandas stage over the scan.
+* extraction stays a single narrow mapInArrow stage over the scan.
 
 Plan inspection only — nothing here drains data, so the module is cheap.
 """
@@ -120,7 +120,7 @@ class TestSingleArrowNode:
             F.lit(None).cast("timestamp").alias("ts"),
         )
         plan = _plan(extract_transcripts(t, repartition=True))
-        assert plan.count("MapInPandas") == 1
+        assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan
         # exactly the one salted-repartition exchange feeds the extractor
         assert plan.count("Exchange") == 1
 

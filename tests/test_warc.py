@@ -188,6 +188,43 @@ def test_streaming_warc_ingest_exactly_once(spark, tmp_path):
     assert catalog.read("cdx").count() == n
 
 
+def test_streaming_warc_pages_keep_string_file_ids(spark, tmp_path):
+    """A non-numeric ``file_id`` (a WARC filename) survives extraction:
+    the pages table holds one row per intact response, keyed by the
+    original string id, not an empty join on a NULL cast."""
+    import pandas as pd
+
+    from mistral_ocr_pipeline_spark.sources.catalog import TableCatalog
+    from mistral_ocr_pipeline_spark.streaming.warc import run_warc_ingest
+
+    rows = []
+    for i in range(3):
+        body = (
+            f"HTTP/1.1 200 OK{CRLF}{CRLF}"
+            f"<html><body><h1>T{i}</h1><p>page body {i} words</p></body></html>"
+        )
+        rows.append((
+            f"CC-MAIN-{i:05d}.warc.gz",
+            _rec("response", f"https://h/{i}", body)
+            + _rec("request", f"https://h/{i}", "GET /"),
+        ))
+    input_dir = tmp_path / "in"
+    input_dir.mkdir()
+    pd.DataFrame(rows, columns=["file_id", "warc"]).to_parquet(
+        input_dir / "b0.parquet", index=False
+    )
+    catalog = TableCatalog(spark, str(tmp_path / "wh"))
+    run_warc_ingest(
+        spark, str(input_dir), "file_id string, warc string", catalog,
+        str(tmp_path / "ckpt"), extract=True,
+    )
+    pages = sorted(catalog.read("pages").collect(), key=lambda r: r.file_id)
+    assert [(r.file_id, r.rec_idx, r.target_uri) for r in pages] == [
+        (f"CC-MAIN-{i:05d}.warc.gz", 0, f"https://h/{i}") for i in range(3)
+    ]
+    assert [r.extracted_text.split("\n")[0] for r in pages] == ["T0", "T1", "T2"]
+
+
 def test_warc_robots_roundtrip_equals_direct_parse(spark):
     """Registry composite: robots.txt rules recovered through the WARC
     archive equal the direct parse of the same payloads exactly."""

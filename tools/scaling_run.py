@@ -4,7 +4,7 @@ driver instruction: evidence it with the same job at two parallelism
 levels on the same input, reporting throughput at both + efficiency).
 
 Three measurements per level, each in a fresh process:
-  1. the Spark job (salted-auto repartition → mapInPandas → noop sink);
+  1. the Spark job (salted-auto repartition → mapInArrow → noop sink);
   2. the pure-Python extraction kernel under multiprocessing — NO Spark —
      which bounds what ANY engine can achieve on this single box;
 together they separate engine scaling from the machine's memory-bandwidth
@@ -160,7 +160,7 @@ instruction this is evidenced by the same job at two parallelism levels
 Input: mixed-payload transcripts (1/3 plain, 1/3 HTML page, 1/3 PDF-layout
 tool payload) derived from `{SF_DIR}/documents.parquet` × {REP} =
 {s_n["turns"]} turns.  Job: scan → (adaptive salted repartition — input is
-already fine-grained, so no shuffle engages) → `mapInPandas` extraction →
+already fine-grained, so no shuffle engages) → `mapInArrow` extraction →
 noop sink.  Fresh JVM/process per measurement, warmup drain before
 timing, best-of-2 drains per measurement (this VM has periodic
 multi-second whole-machine stalls; interference only ever deflates a run).
