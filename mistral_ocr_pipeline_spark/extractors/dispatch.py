@@ -12,6 +12,15 @@ Routing:
 * HTML sniff on ``text`` → HTML boilerplate-strip path;
 * otherwise → plain normalization.
 
+``extract_turn`` is the scalar reference.  The engine's batch stage
+(``plans.extract_pipeline._extract_one``) routes whole Arrow columns first
+and calls it only for the rows the columnar rules cannot decide:
+
+* ``tool`` null and ``text`` null or all ``ASCII_WS`` → ``empty``, columnar;
+* ``tool`` null and ``text`` without ``<`` (the HTML sniff needs one) →
+  ``plain``, columnar (NFC via ``unicodedata`` on non-ASCII rows only);
+* any non-null ``tool``, or ``text`` with a ``<`` → ``extract_turn``.
+
 The output record is the golden contract (FIXTURES.md §2):
 ``(payload_kind, extracted_text, spans, md, error)`` with spans =
 ``[(start, end, kind, ref)]`` offsets into ``extracted_text``.
@@ -30,7 +39,7 @@ from mistral_ocr_pipeline_spark.extractors.html_extract import (
 from mistral_ocr_pipeline_spark.extractors.pdf_layout import (
     extract_pdf_layout_blocks,
 )
-from mistral_ocr_pipeline_spark.extractors.textnorm import normalize_plain
+from mistral_ocr_pipeline_spark.extractors.textnorm import ASCII_WS, normalize_plain
 
 Span = tuple[int, int, str, str]
 
@@ -132,7 +141,7 @@ def extract_turn(text: str | None, tool: str | None) -> dict[str, Any]:
                 )
         # valid JSON but not a layout payload → fall through to text
 
-    if text is None or not text.strip(" \t\n\r\f\v"):  # ASCII ws: SQL-oracle aligned
+    if text is None or not text.strip(ASCII_WS):  # ASCII ws: SQL-oracle aligned
         return _record(KIND_EMPTY, "", [], "")
 
     if looks_like_html(text):

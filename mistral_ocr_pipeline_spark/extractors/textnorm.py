@@ -6,11 +6,12 @@ with NFC unicode normalization pinned so that byte-equality between the
 Spark engine and the pure-Python oracle is well-defined (SURVEY.md §7.4.1).
 
 The *plain* payload normalization is intentionally expressible in ANSI SQL
-(``trim(regexp_replace(nfc_normalize(text), '[ \\t\\n\\v\\f\\r]+', ' ', 'g'),
+(``trim(regexp_replace(nfc_normalize(text), WS_CLASS || '+', ' ', 'g'),
 ' ')``) so the DuckDB oracle can verify the plain extraction path
-end-to-end.  The class is spelled out because RE2's ``\\s`` does not match
-``\\v``, and ``trim`` names ``' '`` because DuckDB's one-argument ``trim``
-also strips Unicode spaces such as NBSP.
+end-to-end, and in ``pyarrow.compute`` so the engine runs it on whole
+columns.  ``WS_CLASS`` spells the whitespace class out because RE2's
+``\\s`` does not match ``\\v``, and ``trim`` names ``' '`` because DuckDB's
+one-argument ``trim`` also strips Unicode spaces such as NBSP.
 """
 
 from __future__ import annotations
@@ -18,14 +19,29 @@ from __future__ import annotations
 import re
 import unicodedata
 
-# ASCII whitespace only ([ \t\n\r\f\v]) — the set Java's `\s` matches (Spark
-# rlike/regexp_replace).  RE2's `\s` (DuckDB) omits `\v`, so the DuckDB twin
-# spells the class out as `[ \t\n\v\f\r]` to stay exact.
-# Unicode spaces (NBSP, ideographic space) are intentionally NOT collapsed.
-_WS_RUN = re.compile(r"\s+", re.ASCII)
+# ASCII whitespace, spelled once: the set Python's `str.strip(ASCII_WS)` and
+# ASCII `\s`, and Java's `\s` (Spark rlike/regexp_replace) match.  RE2's `\s`
+# (DuckDB, pyarrow.compute) omits `\v`, so every regex below, the Arrow
+# routes in plans.extract_pipeline and the DuckDB twins in
+# plans.entry_queries use the class derived from it.  Unicode spaces (NBSP,
+# ideographic space) are intentionally NOT collapsed.
+ASCII_WS = " \t\n\v\f\r"
+
+
+def _char_class(chars: str) -> str:
+    """``[...]`` with hex escapes, read alike by Python re, RE2 and Java."""
+    return "[" + "".join(f"\\x{ord(c):02x}" for c in chars) + "]"
+
+
+WS_CLASS = _char_class(ASCII_WS)
+_WS_BREAK = _char_class(ASCII_WS.replace(" ", ""))  # whitespace other than ' '
+# the runs a collapse changes (a lone space is its own collapse); RE2
+# rewriting only these is ~5x cheaper than rewriting every WS_CLASS run
+WS_COLLAPSIBLE_RUN = f"{_WS_BREAK}{WS_CLASS}*| {WS_CLASS}+"
+_WS_RUN = re.compile(WS_CLASS + "+")
 # fast-path detector: any non-space ASCII whitespace or a double space means
 # the full collapse must run; otherwise strip alone is sufficient
-_WS_NEEDS_COLLAPSE = re.compile(r"[\t\n\r\f\v]|  ", re.ASCII)
+_WS_NEEDS_COLLAPSE = re.compile(f"{_WS_BREAK}|  ")
 
 # References-heading predicate, same regex the reference applies to stop
 # page processing at the bibliography (reference utils/utils.py:21-24).
@@ -54,8 +70,7 @@ def collapse_ws(s: str) -> str:
 def normalize_plain(s: str) -> str:
     """Extraction for the *plain* payload family: NFC → collapse ws → strip.
 
-    SQL-oracle equivalent (DuckDB):
-    ``trim(regexp_replace(nfc_normalize(text), '[ \\t\\n\\v\\f\\r]+', ' ', 'g'), ' ')``
+    SQL-oracle equivalent (DuckDB): ``plans.entry_queries._NORM``.
     """
     return collapse_ws(nfc(s))
 

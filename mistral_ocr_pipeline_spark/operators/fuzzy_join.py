@@ -36,13 +36,6 @@ def levenshtein_sim(a: Column, b: Column) -> Column:
     ).cast("double")
 
 
-def difflib_sim(a: Column, b: Column) -> Column:
-    """SequenceMatcher.ratio — byte-parity with the reference metric
-    (C5 in SURVEY.md §2.8: levenshtein is NOT the same metric, so this
-    variant exists for golden comparisons).  Arrow-batched pandas UDF."""
-    return difflib_sim_norm(norm_key_col(a), norm_key_col(b))
-
-
 def fuzzy_best_match(
     left: DataFrame,
     right: DataFrame,

@@ -17,6 +17,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
+from mistral_ocr_pipeline_spark.extractors.textnorm import WS_CLASS
+
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
@@ -69,14 +71,18 @@ def transcripts_from_documents(docs: DataFrame) -> DataFrame:
 
 # normalized plain text, shared SQL fragment (engine: extractors.textnorm).
 # The kernel collapses ASCII whitespace and strips only ' ': RE2's \s leaves
-# \v alone, and one-argument trim() also strips Unicode spaces such as NBSP.
+# \v alone, and one-argument trim() also strips Unicode spaces such as NBSP,
+# so both twins spell textnorm's WS_CLASS and trim ' '.
 _NORM = (
-    "trim(regexp_replace(nfc_normalize({c}), '[ \\t\\n\\v\\f\\r]+', ' ', 'g'), ' ')"
+    "trim(regexp_replace(nfc_normalize({c}), '" + WS_CLASS + "+', ' ', 'g'), ' ')"
 )
-# matching key (functions.text_functions.norm_key_col)
+# matching key (functions.text_functions.norm_key_col, Java regex).  Both
+# twins keep ASCII \w, so they drop non-ASCII letters ('Café' → 'caf') where
+# the Python textnorm.norm_key keeps them; the registry compares the two
+# twins only.
 _KEY = (
-    "trim(regexp_replace(regexp_replace(lower({c}), '[^\\w\\s/\\-]', '', 'g'),"
-    " '\\s+', ' ', 'g'))"
+    "trim(regexp_replace(regexp_replace(lower({c}), '[^\\w" + WS_CLASS[1:-1]
+    + "/\\-]', '', 'g'), '" + WS_CLASS + "+', ' ', 'g'), ' ')"
 )
 
 

@@ -7,8 +7,12 @@ Design points, per the north rule:
 
 * **No per-row Python in Spark's pipeline** — extraction runs inside one
   ``mapInArrow`` stage: ``pyarrow.RecordBatch`` in, ``RecordBatch`` out,
-  no pandas in between; the per-document loops live inside the extractor
-  batch (same contract as lxml/NumPy inner loops).
+  no pandas in between.  Each batch is routed with ``pyarrow.compute``:
+  tool-less turns that are blank (``empty``) or cannot be HTML (``plain``)
+  are computed as whole Arrow columns; only tool, HTML-candidate and
+  PDF-layout rows reach the per-row kernel ``extract_turn``, whose
+  per-document loops live inside the batch (same contract as lxml/NumPy
+  inner loops).
 * **conv_id-salted repartitioning** defuses long-conversation skew: each
   turn is independent (the reference re-sorts after unordered completion,
   main.py:203-209, so per-turn parallelism is semantics-preserving), and
@@ -23,12 +27,22 @@ from __future__ import annotations
 
 from collections.abc import Iterator, Iterable
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F, types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from mistral_ocr_pipeline_spark.extractors.dispatch import extract_turn
+from mistral_ocr_pipeline_spark.extractors.dispatch import (
+    KIND_EMPTY,
+    KIND_PLAIN,
+    extract_turn,
+)
+from mistral_ocr_pipeline_spark.extractors.textnorm import (
+    WS_CLASS,
+    WS_COLLAPSIBLE_RUN,
+    nfc,
+)
 
 SPAN_TYPE = T.ArrayType(
     T.StructType(
@@ -81,6 +95,8 @@ _PASS_THROUGH = ("conv_id", "turn_idx", "role", "ts")
 _RESULT_FIELDS = [
     f for f in to_arrow_schema(EXTRACT_OUTPUT_SCHEMA) if f.name not in _PASS_THROUGH
 ]
+_SPANS_TYPE = next(f.type for f in _RESULT_FIELDS if f.name == "spans")
+_BLANK = f"^{WS_CLASS}*$"  # the kernel's `not text.strip(ASCII_WS)`
 
 
 def _byte_bounded(batch: pa.RecordBatch, budget: int) -> Iterator[pa.RecordBatch]:
@@ -123,17 +139,87 @@ def _make_extract_batches(budget: int):
 
 
 def _extract_one(batch: pa.RecordBatch) -> pa.RecordBatch:
-    # Per-row dispatch is the MEASURED optimum here, not an oversight.
-    # to_pylist() gives None for nulls, as the dispatcher expects, and
-    # pa.array takes the kernel's span tuples as struct values.
-    recs = list(
-        map(extract_turn, batch["text"].to_pylist(), batch["tool"].to_pylist())
-    )
+    """Extract one batch, equal row for row to ``extract_turn``.
+
+    Tool-less rows whose text is null or all ASCII whitespace (``empty``)
+    or holds no ``<`` (``plain``: the HTML sniff needs one) are computed as
+    whole columns; every other row goes through ``extract_turn``.  A mixed
+    batch copies the per-row rows' ``text`` and ``tool`` once, on their way
+    to Python strings, and puts the result rows back in input order with
+    one ``take`` per result column; the pass-through columns are never
+    copied."""
+    text, tool = batch["text"], batch["tool"]
+    blank = pc.fill_null(pc.match_substring_regex(text, _BLANK), True)
+    maybe_html = pc.fill_null(pc.match_substring(text, "<"), False)
+    fast = pc.and_(pc.is_null(tool), pc.or_(blank, pc.invert(maybe_html)))
+    plain = pc.invert(blank)  # of the fast rows
+    n_fast = pc.sum(fast).as_py() or 0
+    if n_fast == batch.num_rows:
+        cols = _columnar(text, plain)
+    elif n_fast == 0:
+        cols = _per_row(text.to_pylist(), tool.to_pylist())
+    else:
+        slow = pc.invert(fast)
+        done = _columnar(text.filter(fast), plain.filter(fast))
+        # the filtered payload copies die once they are Python strings
+        rest = _per_row(text.filter(slow).to_pylist(), tool.filter(slow).to_pylist())
+        # output row i is row order[i] of done ++ rest
+        is_slow = slow.to_numpy(zero_copy_only=False)
+        slow_before = np.cumsum(is_slow) - is_slow
+        order = np.where(
+            is_slow, n_fast + slow_before, np.arange(len(is_slow)) - slow_before
+        )
+        cols = [pa.concat_arrays(pair).take(order) for pair in zip(done, rest)]
     return pa.RecordBatch.from_arrays(
-        [batch[c] for c in _PASS_THROUGH]
-        + [pa.array([r[f.name] for r in recs], f.type) for f in _RESULT_FIELDS],
-        names=EXTRACT_OUTPUT_SCHEMA.names,
+        [batch[c] for c in _PASS_THROUGH] + cols, names=EXTRACT_OUTPUT_SCHEMA.names
     )
+
+
+def _per_row(texts: list, tools: list) -> list[pa.Array]:
+    """The result columns from ``extract_turn`` on ``to_pylist()`` values
+    (None for nulls, as the dispatcher expects); ``pa.array`` takes the
+    kernel's span tuples as struct values."""
+    recs = list(map(extract_turn, texts, tools))
+    return [pa.array([r[f.name] for r in recs], f.type) for f in _RESULT_FIELDS]
+
+
+def _columnar(text: pa.Array, plain: pa.Array) -> list[pa.Array]:
+    """The result columns of tool-less rows without ``<``: ``plain`` rows
+    get ``normalize_plain`` (NFC, ASCII-whitespace collapse, strip ' ') and
+    one paragraph span; the others are blank and come out ``empty``.
+
+    pyarrow 16's ``utf8_normalize(form="NFC")`` returns decomposed text, so
+    only the non-ASCII rows take ``unicodedata``'s NFC; RE2's ``\\s`` misses
+    ``\\v``, so the collapse uses textnorm's explicit class."""
+    non_ascii = pc.and_(plain, pc.invert(pc.fill_null(pc.string_is_ascii(text), True)))
+    if pc.any(non_ascii).as_py():
+        composed = [nfc(s) for s in text.filter(non_ascii).to_pylist()]
+        text = pc.replace_with_mask(text, non_ascii, pa.array(composed, pa.string()))
+    out = pc.replace_substring_regex(text, WS_COLLAPSIBLE_RUN, " ")
+    out = pc.fill_null(pc.utf8_trim(out, " "), "")
+    length = pc.utf8_length(out)  # code points, as Python's len
+    has_span = pc.greater(length, 0)
+    ends = length.filter(has_span)
+    n = len(ends)
+    spans = pa.StructArray.from_arrays(
+        [
+            pa.repeat(pa.scalar(0, pa.int32()), n),
+            ends,
+            pa.repeat(pa.scalar("paragraph"), n),
+            pa.repeat(pa.scalar(""), n),
+        ],
+        fields=list(_SPANS_TYPE.value_type),
+    )
+    offsets = pa.concat_arrays(
+        [pa.array([0], pa.int32()), pc.cumulative_sum(has_span.cast(pa.int32()))]
+    )
+    return [
+        pc.if_else(plain, KIND_PLAIN, KIND_EMPTY),
+        out,
+        pa.ListArray.from_arrays(offsets, spans, type=_SPANS_TYPE),
+        out,
+        pa.nulls(len(out), pa.string()),
+    ]
 
 
 def extract_transcripts(

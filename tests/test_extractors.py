@@ -303,21 +303,6 @@ class TestScalars:
         assert not is_numeric_string("J. Clin. Med.")
         assert not is_numeric_string(None)
 
-    def test_normalize_plain_sql_equivalence(self):
-        """normalize_plain must stay expressible as the DuckDB oracle
-        trim(regexp_replace(nfc_normalize(x), '\\s+', ' ', 'g'))."""
-        import duckdb
-
-        samples = [
-            "  hello \r\n world ", "café  x", "a b", "日本\t語",
-        ]
-        for s in samples:
-            got = duckdb.sql(
-                "select trim(regexp_replace(nfc_normalize(?), '\\s+', ' ', 'g'))",
-                params=[s],
-            ).fetchone()[0]
-            assert got == normalize_plain(s), repr(s)
-
     def test_norm_twin_matches_normalize_plain(self):
         """The registry's DuckDB twin of the plain path (``_NORM``) agrees
         with ``normalize_plain`` on every ASCII whitespace character,
@@ -331,11 +316,33 @@ class TestScalars:
             "a\x0bb c", "\x0b", " x\x0b", "a\x0cb", "line\r\nnext\r\n",
             "tab\there\x0b\x0c\r\n end", "nb\u00a0sp \u00a0", "\u00a0",
             "cafe\u0301", "caf\u00e9\u0301", "\u212b A\u030a \u00c5\u030a",
+            "  hello \r\n world ", "caf\u00e9  x", "a b", "\u65e5\u672c\t\u8a9e",
         ]
         sql = "select " + _NORM.format(c="?")
         for s in samples:
             got = duckdb.sql(sql, params=[s]).fetchone()[0]
             assert got == normalize_plain(s), repr(s)
+
+    def test_key_twin_matches_norm_key_col(self, spark):
+        """The registry's DuckDB twin of the matching key (``_KEY``) agrees
+        with its Spark side, ``norm_key_col``, on ``\\v`` (RE2's ``\\s``
+        misses it), NBSP, Unicode letters and spaces, and punctuation."""
+        import duckdb
+
+        from mistral_ocr_pipeline_spark.functions.text_functions import norm_key_col
+        from mistral_ocr_pipeline_spark.plans.entry_queries import _KEY
+
+        samples = [
+            "a\x0bb c", "x\u00a0y ", "Caf\u00e9 \u00dcber", " a\t\r\n b \t ",
+            "a_b/c-d!", "p\x1cq", "u\u2003v", "\x0b", "",
+        ]
+        df = spark.createDataFrame(list(enumerate(samples)), "i int, s string")
+        keys = df.select("i", norm_key_col(df.s).alias("k")).collect()
+        spark_side = {r.i: r.k for r in keys}
+        sql = "select " + _KEY.format(c="?")
+        for i, s in enumerate(samples):
+            got = duckdb.sql(sql, params=[s]).fetchone()[0]
+            assert got == spark_side[i], repr(s)
 
 
 class TestAdversarialPipeline:

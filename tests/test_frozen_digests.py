@@ -9,10 +9,14 @@ with ``json.dumps(..., sort_keys=True, ensure_ascii=False)``.
 
 The inputs are ``fixtures.gen`` profiles at fixed seeds plus hand-written
 turns around the whitespace and Unicode traps (``\\v``, NBSP, combining
-marks, precomposed + combining sequences).  A digest mismatch is a change
-in extraction output: fix the change, or, when the new output is intended,
-say so and why before rewriting the fixture with ``python
-tests/test_frozen_digests.py --write`` (it refuses to overwrite the file).
+marks, precomposed + combining sequences).  A second fixture
+(``data/frozen_perfbench_digests.json``) covers the benchmark's ``mix``
+and ``skew`` families at small scale, built with
+``perfbench.inputs.make_chunk``.  A digest mismatch is a change in
+extraction output: fix the change, or, when the new output is intended,
+say so and why before rewriting a fixture with ``python
+tests/test_frozen_digests.py --write`` (it writes only missing fixtures and
+never overwrites one).
 """
 
 from __future__ import annotations
@@ -25,6 +29,7 @@ from pathlib import Path
 import pytest
 
 FIXTURE = Path(__file__).parent / "data" / "frozen_extraction_digests.json"
+PERFBENCH_FIXTURE = FIXTURE.with_name("frozen_perfbench_digests.json")
 
 # (profile, n_convs, turns_per_conv, seed)
 GEN_CASES = [
@@ -90,6 +95,31 @@ def _inputs():
     return rows
 
 
+# (family, seed, chunks, scale) for perfbench.inputs.make_chunk
+PERFBENCH_CASES = [
+    ("mix", 7, (0, 1, 2, 3), 0.01),
+    ("mix", 101, (0, 1), 0.01),
+    ("skew", 7, (0, 1), 0.005),
+    ("skew", 101, (0,), 0.005),
+]
+
+
+def _perfbench_inputs():
+    """The benchmark's input rows, conv_ids prefixed with their case; the
+    chunks of one seed share the hot ``skew`` conversation."""
+    from perfbench.inputs import make_chunk
+
+    rows = []
+    for family, seed, chunks, scale in PERFBENCH_CASES:
+        for chunk in chunks:
+            chunk_rows, _oracle = make_chunk(family, seed, chunk, scale)
+            rows += [(f"{family}-{seed}/{r[0]}",) + tuple(r[1:]) for r in chunk_rows]
+    return rows
+
+
+FIXTURES = {FIXTURE: _inputs, PERFBENCH_FIXTURE: _perfbench_inputs}
+
+
 def _records(spark, rows, repartition):
     """conv_id -> ordered per-turn records from ``extract_transcripts``."""
     from mistral_ocr_pipeline_spark.fixtures.gen import transcripts_schema
@@ -117,10 +147,9 @@ def _digest(records: list[dict]) -> str:
     return hashlib.sha256(blob.encode("utf-8")).hexdigest()
 
 
-@pytest.mark.parametrize("repartition", [True, False])
-def test_extraction_matches_frozen_digests(spark, repartition):
-    frozen = json.loads(FIXTURE.read_text(encoding="utf-8"))
-    rows = _inputs()
+def _check(spark, fixture, repartition):
+    frozen = json.loads(fixture.read_text(encoding="utf-8"))
+    rows = FIXTURES[fixture]()
     got = _records(spark, rows, repartition)
     assert sorted(got) == sorted(frozen), "conversation set changed"
     bad = [c for c in sorted(frozen) if _digest(got[c]) != frozen[c]]
@@ -134,26 +163,39 @@ def test_extraction_matches_frozen_digests(spark, repartition):
     assert not bad, f"{len(bad)} conversation(s) differ from the frozen digests: {bad}"
 
 
-def _write_fixture() -> None:
-    if FIXTURE.exists():
-        sys.exit(f"{FIXTURE} exists; the digests are frozen, delete it by hand")
+@pytest.mark.parametrize("repartition", [True, False])
+def test_extraction_matches_frozen_digests(spark, repartition):
+    _check(spark, FIXTURE, repartition)
+
+
+@pytest.mark.parametrize("repartition", [True, False])
+def test_perfbench_families_match_frozen_digests(spark, repartition):
+    _check(spark, PERFBENCH_FIXTURE, repartition)
+
+
+def _write_fixtures() -> None:
+    missing = [f for f in FIXTURES if not f.exists()]
+    if not missing:
+        sys.exit("every fixture exists; the digests are frozen, delete one by hand")
     from mistral_ocr_pipeline_spark.session import get_spark
 
     spark = get_spark(app_name="freeze-digests", cores=2, shuffle_partitions=4)
     try:
-        got = _records(spark, _inputs(), repartition=False)
+        for fixture in missing:
+            got = _records(spark, FIXTURES[fixture](), repartition=False)
+            fixture.parent.mkdir(exist_ok=True)
+            fixture.write_text(
+                json.dumps({c: _digest(r) for c, r in sorted(got.items())}, indent=1)
+                + "\n",
+                encoding="utf-8",
+            )
+            print(f"wrote {len(got)} digests to {fixture}")
     finally:
         spark.stop()
-    FIXTURE.parent.mkdir(exist_ok=True)
-    FIXTURE.write_text(
-        json.dumps({c: _digest(r) for c, r in sorted(got.items())}, indent=1) + "\n",
-        encoding="utf-8",
-    )
-    print(f"wrote {len(got)} digests to {FIXTURE}")
 
 
 if __name__ == "__main__":
     if sys.argv[1:] != ["--write"]:
         sys.exit("usage: python tests/test_frozen_digests.py --write")
     sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
-    _write_fixture()
+    _write_fixtures()

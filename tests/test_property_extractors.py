@@ -140,3 +140,130 @@ def test_fast_tokenizer_matches_stdlib(parts):
     assert extract_html_blocks(doc, tokenizer="fast") == extract_html_blocks(
         doc, tokenizer="stdlib"
     )
+
+
+# --- batch path == per-row path ---------------------------------------------
+# ``plans.extract_pipeline._extract_one`` computes tool-less blank and
+# ``<``-free turns as Arrow columns and sends the rest through
+# ``extract_turn``; its output batch must equal the one built from
+# ``extract_turn`` on every row, in input order.
+
+_WS_TEXT = st.text(alphabet=" \t\n\v\f\r", max_size=8)  # includes ""
+_NBSP_TEXT = st.text(alphabet="\u00a0 \v", min_size=1, max_size=6).map(
+    lambda s: s + "\u00a0"
+)
+_UNICODE_TEXT = st.text(  # decomposed, precomposed + combining, stacked marks
+    alphabet="aeAx \t\v\f\u00a0\u00e9\u00c5\u212b\u0301\u0300\u030a\u0308\u3000",
+    min_size=1,
+    max_size=30,
+)
+_LT_TEXT = st.one_of(
+    st.sampled_from(
+        ["<p>a\vb</p>", "<div>cafe\u0301 \u00a0x</div>", "x < y", "a<b",
+         "<notatag>", "<", "  <p>\f</p>  ", "<h1>T\u0301\v</h1><p>b</p>"]
+    ),
+    st.text(alphabet="<>/pdiv \n\v\u00e9\u0301", min_size=1, max_size=30).map(
+        lambda s: "<" + s
+    ),
+)
+_FAST_TEXT = st.one_of(
+    st.none(), _WS_TEXT, _NBSP_TEXT, _UNICODE_TEXT,
+    st.text(max_size=60).filter(lambda s: "<" not in s),
+)
+_TOOL = st.one_of(
+    st.sampled_from(
+        ["", " \t", "[}", "garbage{", '{"kind": "other"}', "null", "  {\"kind\""]
+    ),
+    st.text(max_size=20),
+    st.just(json.dumps({"kind": "pdf_layout", "pages": [{
+        "width": 612.0, "height": 792.0, "blocks": [{
+            "type": 0, "bbox": [50.0, 50.0, 300.0, 300.0], "lines": [{
+                "bbox": [50.0, 60.0, 300.0, 72.0], "spans": [{
+                    "text": "Intro\vduction cafe\u0301", "size": 10.0,
+                    "bbox": [50.0, 60.0, 300.0, 72.0]}]}]}]}]})),
+)
+_FAST_ROW = st.tuples(_FAST_TEXT, st.none())
+_SLOW_ROW = st.one_of(
+    st.tuples(st.one_of(_FAST_TEXT, _LT_TEXT), _TOOL),
+    st.tuples(_LT_TEXT, st.none()),
+)
+
+
+def _batch(rows):
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from mistral_ocr_pipeline_spark.fixtures.gen import transcripts_schema
+
+    schema = to_arrow_schema(transcripts_schema())
+    n = len(rows)
+    cols = {
+        "conv_id": [f"c{i % 3}" for i in range(n)],
+        "turn_idx": list(range(n)),
+        "role": ["user", None, "tool"] * (n // 3) + ["user", None][: n % 3],
+        "text": [r[0] for r in rows],
+        "tool": [r[1] for r in rows],
+        "ts": [None] * n,
+    }
+    return pa.RecordBatch.from_arrays(
+        [pa.array(cols[f.name], f.type) for f in schema], schema=schema
+    )
+
+
+def _assert_batch_equals_per_row(rows):
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from mistral_ocr_pipeline_spark.plans.extract_pipeline import (
+        EXTRACT_OUTPUT_SCHEMA,
+        _extract_one,
+    )
+
+    batch = _batch(rows)
+    recs = [extract_turn(text, tool) for text, tool in rows]
+    expected = pa.RecordBatch.from_arrays(
+        [
+            batch[f.name] if f.name in batch.schema.names
+            else pa.array([r[f.name] for r in recs], f.type)
+            for f in to_arrow_schema(EXTRACT_OUTPUT_SCHEMA)
+        ],
+        names=EXTRACT_OUTPUT_SCHEMA.names,
+    )
+    got = _extract_one(batch)
+    assert got.schema == expected.schema
+    assert got.equals(expected), [
+        (row, g, e)
+        for row, g, e in zip(rows, got.to_pylist(), expected.to_pylist())
+        if g != e
+    ]
+
+
+@settings(max_examples=300, deadline=None)
+@given(rows=st.lists(st.one_of(_FAST_ROW, _SLOW_ROW), max_size=40))
+def test_batch_path_matches_per_row_mixed(rows):
+    _assert_batch_equals_per_row(rows)
+
+
+@settings(max_examples=200, deadline=None)
+@given(rows=st.lists(_FAST_ROW, min_size=1, max_size=40))
+def test_batch_path_matches_per_row_all_fast(rows):
+    _assert_batch_equals_per_row(rows)
+
+
+@settings(max_examples=100, deadline=None)
+@given(rows=st.lists(_SLOW_ROW, min_size=1, max_size=20))
+def test_batch_path_matches_per_row_no_fast(rows):
+    _assert_batch_equals_per_row(rows)
+
+
+def test_batch_path_matches_per_row_explicit():
+    _assert_batch_equals_per_row([])
+    fast = [(None, None), ("", None), ("\v\f \r\n\t", None), ("\u00a0", None),
+            ("a\vb  c\t", None), ("cafe\u0301 caf\u00e9\u0301", None),
+            ("\u212b x\u3000 y", None)]
+    slow = [("<p>a</p>", None), ("a < b", None), ("t", ""), ("t", "[}"),
+            (None, " "), ("x", '{"kind": "other"}')]
+    _assert_batch_equals_per_row(fast)
+    _assert_batch_equals_per_row(slow)
+    _assert_batch_equals_per_row([r for pair in zip(fast, slow) for r in pair])
+    _assert_batch_equals_per_row(slow[:2] + fast + slow[2:])
