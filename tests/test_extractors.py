@@ -303,6 +303,21 @@ class TestScalars:
         assert not is_numeric_string("J. Clin. Med.")
         assert not is_numeric_string(None)
 
+    def test_normalize_plain_sql_equivalence(self):
+        """normalize_plain must stay expressible as the DuckDB oracle
+        trim(regexp_replace(nfc_normalize(x), '\\s+', ' ', 'g'))."""
+        import duckdb
+
+        samples = [
+            "  hello \r\n world ", "café  x", "a b", "日本\t語",
+        ]
+        for s in samples:
+            got = duckdb.sql(
+                "select trim(regexp_replace(nfc_normalize(?), '\\s+', ' ', 'g'))",
+                params=[s],
+            ).fetchone()[0]
+            assert got == normalize_plain(s), repr(s)
+
     def test_norm_twin_matches_normalize_plain(self):
         """The registry's DuckDB twin of the plain path (``_NORM``) agrees
         with ``normalize_plain`` on every ASCII whitespace character,
