@@ -28,13 +28,14 @@ import unicodedata
 ASCII_WS = " \t\n\v\f\r"
 
 
-def _char_class(chars: str) -> str:
-    """``[...]`` with hex escapes, read alike by Python re, RE2 and Java."""
-    return "[" + "".join(f"\\x{ord(c):02x}" for c in chars) + "]"
+def _escaped(chars: str) -> str:
+    """Hex escapes, read alike by Python re, RE2 and Java in a ``[...]``."""
+    return "".join(f"\\x{ord(c):02x}" for c in chars)
 
 
-WS_CLASS = _char_class(ASCII_WS)
-_WS_BREAK = _char_class(ASCII_WS.replace(" ", ""))  # whitespace other than ' '
+WS_CHARS = _escaped(ASCII_WS)  # the members, to build other classes from
+WS_CLASS = f"[{WS_CHARS}]"
+_WS_BREAK = f"[{_escaped(ASCII_WS.replace(' ', ''))}]"  # whitespace other than ' '
 # the runs a collapse changes (a lone space is its own collapse); RE2
 # rewriting only these is ~5x cheaper than rewriting every WS_CLASS run
 WS_COLLAPSIBLE_RUN = f"{_WS_BREAK}{WS_CLASS}*| {WS_CLASS}+"

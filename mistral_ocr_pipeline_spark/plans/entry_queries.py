@@ -17,7 +17,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
-from mistral_ocr_pipeline_spark.extractors.textnorm import WS_CLASS
+from mistral_ocr_pipeline_spark.extractors.textnorm import WS_CHARS, WS_CLASS
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -81,7 +81,7 @@ _NORM = (
 # the Python textnorm.norm_key keeps them; the registry compares the two
 # twins only.
 _KEY = (
-    "trim(regexp_replace(regexp_replace(lower({c}), '[^\\w" + WS_CLASS[1:-1]
+    "trim(regexp_replace(regexp_replace(lower({c}), '[^\\w" + WS_CHARS
     + "/\\-]', '', 'g'), '" + WS_CLASS + "+', ' ', 'g'), ' ')"
 )
 

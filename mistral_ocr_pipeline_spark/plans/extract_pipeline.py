@@ -143,8 +143,8 @@ def _extract_one(batch: pa.RecordBatch) -> pa.RecordBatch:
 
     Tool-less rows whose text is null or all ASCII whitespace (``empty``)
     or holds no ``<`` (``plain``: the HTML sniff needs one) are computed as
-    whole columns; every other row goes through ``extract_turn``.  A mixed
-    batch copies the per-row rows' ``text`` and ``tool`` once, on their way
+    whole columns; every other row goes through ``extract_turn``.  A batch
+    with such rows copies the per-row rows' ``text`` and ``tool`` once, on their way
     to Python strings, and puts the result rows back in input order with
     one ``take`` per result column; the pass-through columns are never
     copied."""
@@ -154,10 +154,8 @@ def _extract_one(batch: pa.RecordBatch) -> pa.RecordBatch:
     fast = pc.and_(pc.is_null(tool), pc.or_(blank, pc.invert(maybe_html)))
     plain = pc.invert(blank)  # of the fast rows
     n_fast = pc.sum(fast).as_py() or 0
-    if n_fast == batch.num_rows:
+    if n_fast == batch.num_rows:  # skips the filter, concat and take copies
         cols = _columnar(text, plain)
-    elif n_fast == 0:
-        cols = _per_row(text.to_pylist(), tool.to_pylist())
     else:
         slow = pc.invert(fast)
         done = _columnar(text.filter(fast), plain.filter(fast))

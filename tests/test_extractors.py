@@ -309,7 +309,7 @@ class TestScalars:
         import duckdb
 
         samples = [
-            "  hello \r\n world ", "café  x", "a b", "日本\t語",
+            "  hello \r\n world ", "café  x", "a b", "日本\t語",
         ]
         for s in samples:
             got = duckdb.sql(
@@ -331,7 +331,7 @@ class TestScalars:
             "a\x0bb c", "\x0b", " x\x0b", "a\x0cb", "line\r\nnext\r\n",
             "tab\there\x0b\x0c\r\n end", "nb\u00a0sp \u00a0", "\u00a0",
             "cafe\u0301", "caf\u00e9\u0301", "\u212b A\u030a \u00c5\u030a",
-            "  hello \r\n world ", "caf\u00e9  x", "a b", "\u65e5\u672c\t\u8a9e",
+            "  hello \r\n world ", "cafe\u0301  x", "a\u00a0b", "\u65e5\u672c\t\u8a9e",
         ]
         sql = "select " + _NORM.format(c="?")
         for s in samples:
