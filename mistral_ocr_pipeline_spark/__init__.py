@@ -18,6 +18,12 @@ Spark DataFrame engine:
   API) and the deterministic transcripts fixture generator.
 * ``checkpoint/``  — per-partition lineage + resume (isin filter) protocol.
 * ``streaming/``   — incremental (AvailableNow-style) extraction runner.
+
+Importing the package installs ``_zipcache``: a Python worker imports it
+when it unpickles any of the package's UDFs, and from then on its tasks
+skip re-reading unchanged zip archives on import-cache invalidation.
 """
+
+from mistral_ocr_pipeline_spark import _zipcache  # noqa: F401
 
 __version__ = "0.1.0"

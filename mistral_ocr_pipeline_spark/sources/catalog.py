@@ -788,6 +788,11 @@ class TableCatalog:
         O(both snapshots) scans, which is what a content diff means —
         run it per partition/bucket at scale).
 
+        Both snapshots are compared under their union schema: a column
+        one side lacks reads as null there, so an added column changes
+        (keyed) or re-identifies (keyless) only the rows holding a value
+        in it.
+
         Returns key columns (or all columns when keyless) + ``status``.
         Snapshot ids are accepted in either form — bare ``snap-…`` (the
         `read` convention) or the ``table/snap-…`` relpath
@@ -805,16 +810,22 @@ class TableCatalog:
             if target_snapshot is not None
             else self.read(table, merge_schema=True)
         )
+        # union schema: target's column order, then base-only columns
+        cols = t.columns + [c for c in b.columns if c not in t.columns]
+        types = {f.name: f.dataType for f in (*b.schema, *t.schema)}
+
+        def _aligned(df: DataFrame) -> DataFrame:
+            return df.select(*(
+                F.col(c) if c in df.columns else F.lit(None).cast(types[c]).alias(c)
+                for c in cols
+            ))
+
+        b, t = _aligned(b), _aligned(t)
         if key_cols is None:
-            cols = t.columns
-            added = t.exceptAll(b.select(*cols)).select(
-                *cols, F.lit("added").alias("status")
-            )
-            removed = b.select(*cols).exceptAll(t).select(
-                *cols, F.lit("removed").alias("status")
-            )
+            added = t.exceptAll(b).select(*cols, F.lit("added").alias("status"))
+            removed = b.exceptAll(t).select(*cols, F.lit("removed").alias("status"))
             return added.unionByName(removed)
-        nonkey = [c for c in t.columns if c not in key_cols]
+        nonkey = [c for c in cols if c not in key_cols]
         bs = b.select(
             *key_cols, F.struct(*nonkey).alias("_bv"), F.lit(True).alias("_b")
         )

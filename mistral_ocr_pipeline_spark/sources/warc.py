@@ -88,11 +88,10 @@ def parse_warc_records(
         F.col("p").cast("int").alias("rec_idx"),
         (F.col("r.off") - 1).cast("long").alias("offset"),
         F.expr(
-            f"nullif(regexp_extract({hdr}, 'WARC-Type: ([^\\r\\n]+)', 1), '')"
+            f"nullif(regexp_extract({hdr}, '{_header('WARC-Type')}', 1), '')"
         ).alias("warc_type"),
         F.expr(
-            f"nullif(regexp_extract({hdr}, "
-            "'WARC-Target-URI: ([^\\r\\n]+)', 1), '')"
+            f"nullif(regexp_extract({hdr}, '{_header('WARC-Target-URI')}', 1), '')"
         ).alias("target_uri"),
         F.col("r.clen").cast("long").alias("content_length"),
         F.expr(
@@ -120,12 +119,23 @@ def _hend(pos: str) -> str:
     return f"locate('{_SEP}', _w, {pos})"
 
 
+def _header(name: str, value: str = "[^\\r\\n]+") -> str:
+    """Java regex (inside a SQL string literal) capturing one header's
+    value.  Header names are case-insensitive (ISO 28500), and the name
+    must start a line, so ``X-Content-Length`` is not ``Content-Length``.
+    ``d`` (UNIX_LINES) makes LF the only line end: a latin-1 ``0x85`` byte
+    in a header value does not start a line.  The blanks after the colon
+    are ``[ \\t]``, not ``\\s``, so an empty value never reads the next
+    line."""
+    return f"(?imd)^{name}:[ \\t]*({value})"
+
+
 def _clen(pos: str) -> str:
     return (
         "try_cast(nullif(regexp_extract(substring(_w, "
         f"{pos}, CASE WHEN {_hend(pos)} = 0 THEN length(_w) "
         f"ELSE {_hend(pos)} - {pos} END), "
-        "'Content-Length: ([0-9]+)', 1), '') as int)"
+        f"'{_header('Content-Length', '[0-9]+')}', 1), '') as int)"
     )
 
 

@@ -859,6 +859,37 @@ class TestDiffSnapshots:
         }
         assert rows == {(9, "z", "added"), (1, "x", "removed")}
 
+    def test_diff_across_append_that_adds_a_column(self, spark, tmp_path):
+        """The base snapshot lacks a column the append added: both forms
+        compare under the union schema, the base side reading it as null,
+        so only the appended rows show up."""
+        from mistral_ocr_pipeline_spark.sources.catalog import TableCatalog
+
+        cat = TableCatalog(spark, str(tmp_path / "wh4"))
+        base_df = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
+        cat.commit({"t": cat.stage_overwrite(base_df, "t")})
+        s1 = cat.current_tables()["t"]
+        wider = spark.createDataFrame(
+            [(3, "c", 30), (4, "d", None)], "k long, v string, n long"
+        )
+        cat.commit({"t": cat.stage_append(wider, "t")})
+        assert "n" in cat.read("t", merge_schema=True).columns
+
+        keyed = {
+            r.k: r.status
+            for r in cat.diff_snapshots("t", s1, key_cols=["k"]).collect()
+        }
+        assert keyed == {3: "added", 4: "added"}
+        keyless = cat.diff_snapshots("t", s1)
+        assert keyless.columns == ["k", "v", "n", "status"]
+        assert {tuple(r) for r in keyless.collect()} == {
+            (3, "c", 30, "added"), (4, "d", None, "added")
+        }
+        # and the reverse direction: the added column is base-only there
+        s2 = cat.current_tables()["t"]
+        back = {tuple(r) for r in cat.diff_snapshots("t", s2, s1).collect()}
+        assert back == {(3, "c", 30, "removed"), (4, "d", None, "removed")}
+
     def test_identical_snapshots_empty_diff(self, spark, tmp_path):
         from mistral_ocr_pipeline_spark.sources.catalog import TableCatalog
 

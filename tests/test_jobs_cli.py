@@ -1,14 +1,102 @@
-"""Smoke test for the spark-submit job surface: one subprocess run of
-curation_job end to end (scrub → gate → dedup → split → UniMax → pack),
-asserting every output table published in the single atomic commit.
-One JVM spin-up (~40 s) — kept to a single invocation on the smallest
-scale for suite-time reasons; extract/neardup jobs share the same
-catalog publish path, which test_checkpoint_resume covers in-process."""
+"""Smoke tests for the spark-submit job surface: one subprocess run per
+job on the smallest scale, asserting every output table published in the
+single atomic commit.  Most run ``python spark_jobs/…`` with the repo on
+``PYTHONPATH``; the flagship extraction job runs through ``spark-submit
+--py-files`` with the engine zip as the only route to the package."""
 
+import ast
 import json
 import os
 import subprocess
 import sys
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parents[1]
+
+
+def test_extract_job_spark_submit_py_files(tmp_path):
+    """``spark-submit --py-files <zip> spark_jobs/extract_job.py`` with
+    ``PYTHONPATH`` unset and the working directory outside the repo, so
+    driver and workers can import the engine only from the zip: output and
+    lineage commit together and cover every input turn.  Then a Python that
+    zip-imports the package the same way has the archive-reread patch
+    active (CPython < 3.13) and re-reads nothing on invalidation."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pyspark
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from mistral_ocr_pipeline_spark.fixtures.gen import (
+        gen_transcripts,
+        transcripts_schema,
+    )
+
+    zip_path = tmp_path / "engine.zip"
+    subprocess.run(
+        [sys.executable, str(ROOT / "tools" / "make_pyfiles.py"), str(zip_path)],
+        check=True, capture_output=True,
+    )
+    schema = to_arrow_schema(transcripts_schema())
+    rows = gen_transcripts(24, 3, seed=11, profile="unit")
+    inp = str(tmp_path / "transcripts.parquet")
+    pq.write_table(
+        pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows], schema),
+        inp,
+    )
+    wh = tmp_path / "wh"
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["PYSPARK_PYTHON"] = env["PYSPARK_DRIVER_PYTHON"] = sys.executable
+    spark_home = os.environ.get("SPARK_HOME") or os.path.dirname(pyspark.__file__)
+    proc = subprocess.run(
+        [
+            os.path.join(spark_home, "bin", "spark-submit"),
+            "--master", "local[2]",
+            "--conf", "spark.ui.enabled=false",
+            "--py-files", str(zip_path),
+            str(ROOT / "spark_jobs" / "extract_job.py"),
+            "--input", inp, "--warehouse", str(wh), "--n-buckets", "4",
+        ],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=400,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    summary = ast.literal_eval(proc.stdout.strip().splitlines()[-1])
+    assert summary["processed_buckets"] == 4
+    assert summary["total_rows"] == len(rows)
+    manifest = json.loads(
+        (wh / "_manifests" / (wh / "_HEAD").read_text().strip()).read_text()
+    )
+    assert set(manifest["tables"]) == {"extracted", "run_partitions"}
+    out = pq.read_table(wh / manifest["tables"]["extracted"])
+    assert sorted(zip(out["conv_id"].to_pylist(), out["turn_idx"].to_pylist())) == (
+        sorted((r[0], r[1]) for r in rows)
+    )
+    lineage = pq.read_table(wh / manifest["tables"]["run_partitions"])
+    assert sorted(lineage["conv_bucket"].to_pylist()) == [0, 1, 2, 3]
+    assert sum(lineage["rows"].to_pylist()) == len(rows)
+
+    probe = (
+        "import importlib, sys, zipimport\n"
+        "import mistral_ocr_pipeline_spark as m\n"
+        "reads = []\n"
+        "real = zipimport._read_directory\n"
+        "zipimport._read_directory = lambda p: reads.append(p) or real(p)\n"
+        "importlib.invalidate_caches()\n"
+        "reads.clear()\n"
+        "importlib.invalidate_caches()\n"
+        "print(m.__file__, zipimport.zipimporter.invalidate_caches.__module__,"
+        " len(reads))\n"
+    )
+    env["PYTHONPATH"] = str(zip_path)
+    zp = subprocess.run(
+        [sys.executable, "-c", probe],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=60,
+    )
+    assert zp.returncode == 0, zp.stderr[-2000:]
+    pkg_file, patch_module, reads = zp.stdout.split()
+    assert pkg_file.startswith(str(zip_path) + os.sep)
+    installed = patch_module == "mistral_ocr_pipeline_spark._zipcache"
+    assert installed == (sys.version_info < (3, 13))
+    assert reads == "0"
 
 
 def test_curation_job_cli(tmp_path):

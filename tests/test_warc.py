@@ -57,6 +57,48 @@ def test_body_containing_separator_is_not_resplit(spark):
     assert rows[0].content_length == len(body)
 
 
+def test_header_names_are_case_insensitive_and_line_anchored(spark):
+    def rec(names, typ, uri, body):
+        t, u, n = names
+        return (
+            f"WARC/1.0{CRLF}{t}: {typ}{CRLF}{u}: {uri}{CRLF}"
+            f"{n}: {len(body)}{CRLF}{CRLF}{body}{CRLF}{CRLF}"
+        )
+
+    recs = [("response", "https://a/1", "first body"), ("request", "u2", "two")]
+    spellings = [
+        ("WARC-Type", "WARC-Target-URI", "Content-Length"),
+        ("warc-type", "warc-target-uri", "content-length"),
+        ("Warc-TYPE", "WARC-target-URI", "CONTENT-length"),
+    ]
+    files = [(i, "".join(rec(n, *r) for r in recs)) for i, n in enumerate(spellings)]
+    by_file = {}
+    for r in _parse(spark, files):
+        by_file.setdefault(r.file_id, []).append(
+            {k: v for k, v in r.asDict().items() if k != "file_id"}
+        )
+    canonical = by_file[0]
+    assert [(r["warc_type"], r["target_uri"], r["truncated"]) for r in canonical] == [
+        ("response", "https://a/1", False), ("request", "u2", False)
+    ]
+    assert by_file[1] == canonical and by_file[2] == canonical
+
+    # an X- prefixed header is another header: it neither frames a record
+    # nor names its type or target
+    x_only = (
+        f"WARC/1.0{CRLF}X-WARC-Type: response{CRLF}X-WARC-Target-URI: u{CRLF}"
+        f"X-Content-Length: 4{CRLF}{CRLF}body{CRLF}{CRLF}"
+    )
+    x_first = (
+        f"WARC/1.0{CRLF}X-Content-Length: 999{CRLF}Content-Length: 4{CRLF}"
+        f"{CRLF}body{CRLF}{CRLF}"
+    )
+    (a,), (b,) = _parse(spark, [(7, x_only)]), _parse(spark, [(8, x_first)])
+    assert (a.warc_type, a.target_uri, a.content_length) == (None, None, None)
+    assert a.truncated
+    assert b.content_length == 4 and not b.truncated
+
+
 def test_malformed_length_stops_walk_with_flag(spark):
     # record 2 lies about its length (runs past EOF): flagged truncated,
     # walk stops — no fabricated record 3
