@@ -1857,9 +1857,10 @@ def connected_components(
     Dedup clusters are shallow (near-dup balls, diameter ≲ a few hops), so
     3-4 rounds typically suffice; ``max_iter`` bounds adversarial chains.
 
-    Scale notes: per round, one shuffle for the message groupBy and one for
-    the label join — both on well-distributed ids.  ``localCheckpoint``
-    truncates lineage each round; without it the iterated join plan grows
+    Scale notes: the symmetric edge list is checkpointed once; per round,
+    one shuffle for the message groupBy and one for the label join — both
+    on well-distributed ids.  ``localCheckpoint`` truncates lineage each
+    round; without it the iterated join plan grows
     exponentially and the driver OOMs planning round ~15.  Early-exit when
     a round changes no label (one lightweight count per round, on the
     already-materialized checkpoint).
@@ -1881,7 +1882,9 @@ def connected_components(
             return df.checkpoint(eager=True)
         return df.localCheckpoint(eager=True)
 
-    sym = (
+    # static across rounds: materialized once, or every round would re-run
+    # the whole pair generation (LSH bands, embedding joins) behind `edges`
+    sym = _ckpt(
         edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionAll(edges.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
         .distinct()

@@ -1118,7 +1118,8 @@ def mmr_topk_df(
        sized relations only: pairwise candidate cosines are ONE
        self-equi-join on qid (pool² rows per query), each round is a
        tiny join + groupBy(max) + row_number window, and the selected
-       set accumulates by union.  No collect at any query count — a
+       set accumulates by union, locally checkpointed each round.  No
+       collect at any query count — a
        corpus-sized query relation just makes the small side of every
        round bigger; the corpus itself is touched exactly twice (pool
        scoring + vector fetch).
@@ -1237,7 +1238,10 @@ def mmr_topk_df(
                 F.lit(i).alias("sel_rank"),
             )
         )
-        sel = sel.unionByName(pick)
+        # round i reads `sel` three times (picked, remaining, the union),
+        # so an unbroken lineage plans and runs 3^(k-1) copies of round 1;
+        # the checkpoint keeps every round's plan one round deep
+        sel = sel.unionByName(pick).localCheckpoint(eager=False)
     return sel.select(
         "query_id",
         "vec_id",

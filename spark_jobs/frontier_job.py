@@ -89,30 +89,36 @@ def main() -> None:
     merged = merged.localCheckpoint(eager=True)
 
     # admission over the MERGED frontier (canonicalization is idempotent,
-    # so the gates run on canon_url directly)
-    admitted = (
-        url_trap_flags(merged, "canon_url", "canon_url")
-        .filter(F.col("verdict") == "ok")
-        .select(F.col("id").alias("canon_url"))
-        .join(merged, "canon_url")
-    )
-    if args.block_host:
-        kept = (
-            host_blocklist_gate(
-                admitted, "canon_url", "canon_url", args.block_host
-            )
-            .filter("kept")
-            .select(F.col("id").alias("canon_url"))
+    # so the gates run on canon_url directly).  Every gate is a per-URL
+    # verdict, so each one reads `merged` and the passing keys intersect
+    # by semi-join; a gate fed the previous gate's output would inline its
+    # whole canonicalization tree into the next one's filter and the
+    # optimizer would churn on a plan that grows with every gate.
+    def passing(gated, flag):
+        return gated.filter(flag).select(F.col("id").alias("canon_url"))
+
+    gates = [
+        passing(
+            url_trap_flags(merged, "canon_url", "canon_url"),
+            F.col("verdict") == "ok",
         )
-        admitted = admitted.join(kept, "canon_url")
+    ]
+    if args.block_host:
+        gates.append(passing(
+            host_blocklist_gate(
+                merged, "canon_url", "canon_url", args.block_host
+            ),
+            F.col("kept"),
+        ))
     if args.robots:
         rules = robots_txt_rules(spark.read.parquet(args.robots))
-        ok = (
-            robots_txt_gate(admitted, rules, "canon_url", "canon_url")
-            .filter("fetch_allowed")
-            .select(F.col("id").alias("canon_url"))
-        )
-        admitted = admitted.join(ok, "canon_url")
+        gates.append(passing(
+            robots_txt_gate(merged, rules, "canon_url", "canon_url"),
+            F.col("fetch_allowed"),
+        ))
+    admitted = merged
+    for ok in gates:
+        admitted = admitted.join(ok, "canon_url", "left_semi")
     if catalog.exists("crawled"):
         admitted = admitted.join(
             catalog.read("crawled").select("canon_url"),

@@ -12,6 +12,21 @@ import sys
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
+# A cluster submit sizes shuffles with --conf (see spark_jobs/extract_job.py);
+# these tiny inputs run at the in-session fixture's 8 shuffle partitions
+# rather than Spark's default 200, which costs a task per partition.
+JOB_CONF = ("spark.sql.shuffle.partitions=8", "spark.ui.enabled=false")
+
+
+def _job_env() -> dict:
+    """Environment for ``python spark_jobs/…``: the repo on PYTHONPATH and
+    JOB_CONF handed to the launched JVM as ``spark-submit --conf`` would."""
+    conf = " ".join(f"--conf {c}" for c in JOB_CONF)
+    return dict(
+        os.environ,
+        PYTHONPATH=str(ROOT),
+        PYSPARK_SUBMIT_ARGS=f"{conf} pyspark-shell",
+    )
 
 
 def test_extract_job_spark_submit_py_files(tmp_path):
@@ -51,7 +66,7 @@ def test_extract_job_spark_submit_py_files(tmp_path):
         [
             os.path.join(spark_home, "bin", "spark-submit"),
             "--master", "local[2]",
-            "--conf", "spark.ui.enabled=false",
+            *[a for c in JOB_CONF for a in ("--conf", c)],
             "--py-files", str(zip_path),
             str(ROOT / "spark_jobs" / "extract_job.py"),
             "--input", inp, "--warehouse", str(wh), "--n-buckets", "4",
@@ -101,7 +116,7 @@ def test_extract_job_spark_submit_py_files(tmp_path):
 
 def test_curation_job_cli(tmp_path):
     wh = str(tmp_path / "wh")
-    env = dict(os.environ, PYTHONPATH="/root/repo")
+    env = _job_env()
     proc = subprocess.run(
         [
             sys.executable, "spark_jobs/curation_job.py",
@@ -140,7 +155,7 @@ def test_ann_index_job_cli(tmp_path):
 
     wh = str(tmp_path / "wh_ann")
     out = str(tmp_path / "topk")
-    env = dict(os.environ, PYTHONPATH="/root/repo")
+    env = _job_env()
     common = dict(cwd="/root/repo", env=env, capture_output=True, text=True,
                   timeout=400)
     corpus = "/root/testdata/sf0.001/embeddings.parquet"
@@ -201,7 +216,7 @@ def test_sft_job_cli(tmp_path):
 
     src = str(tmp_path / "transcripts")
     wh = str(tmp_path / "wh_sft")
-    env = dict(os.environ, PYTHONPATH="/root/repo")
+    env = _job_env()
     mk = subprocess.run(
         [
             sys.executable, "-c",
@@ -269,7 +284,7 @@ def test_profile_job_cli(tmp_path):
     nulls2 = con.execute(
         f"SELECT count(*) FROM '{b2}' WHERE text IS NULL"
     ).fetchone()[0]
-    env = dict(os.environ, PYTHONPATH="/root/repo")
+    env = _job_env()
     common = dict(cwd="/root/repo", env=env, capture_output=True, text=True,
                   timeout=400)
 
@@ -337,7 +352,7 @@ def test_linkgraph_job_cli(tmp_path, spark):
     pd.DataFrame(pages(0, 40), columns=cols).to_parquet(b1, index=False)
     pd.DataFrame(pages(40, 90), columns=cols).to_parquet(b2, index=False)
     wh = str(tmp_path / "wh_lg")
-    env = dict(os.environ, PYTHONPATH="/root/repo")
+    env = _job_env()
     common = dict(cwd="/root/repo", env=env, capture_output=True, text=True,
                   timeout=400)
 
@@ -425,7 +440,7 @@ def test_frontier_job_cli(tmp_path, spark):
         columns=["host", "robots_txt"],
     ).to_parquet(robots, index=False)
     wh = str(tmp_path / "wh_fr")
-    env = dict(os.environ, PYTHONPATH="/root/repo")
+    env = _job_env()
     common = dict(cwd="/root/repo", env=env, capture_output=True, text=True,
                   timeout=400)
 
@@ -521,7 +536,7 @@ def test_boilerplate_job_cli(tmp_path, spark):
     pd.DataFrame(pages(0, 30), columns=cols).to_parquet(b1, index=False)
     pd.DataFrame(pages(30, 70), columns=cols).to_parquet(b2, index=False)
     wh = str(tmp_path / "wh_bp")
-    env = dict(os.environ, PYTHONPATH="/root/repo")
+    env = _job_env()
     common = dict(cwd="/root/repo", env=env, capture_output=True, text=True,
                   timeout=400)
 
@@ -614,7 +629,7 @@ def test_warc_job_cli(tmp_path):
     pd.DataFrame(files(0, 6), columns=cols).to_parquet(b1, index=False)
     pd.DataFrame(files(6, 15), columns=cols).to_parquet(b2, index=False)
     wh = str(tmp_path / "wh_warc")
-    env = dict(os.environ, PYTHONPATH="/root/repo")
+    env = _job_env()
     common = dict(cwd="/root/repo", env=env, capture_output=True, text=True,
                   timeout=400)
 
@@ -684,7 +699,7 @@ def test_contract_job_cli(tmp_path):
 
     _json.dump([["text", "null_frac_micro", "le", 100000]], open(contract, "w"))
     wh = str(tmp_path / "wh_ct")
-    env = dict(os.environ, PYTHONPATH="/root/repo")
+    env = _job_env()
     common = dict(cwd="/root/repo", env=env, capture_output=True, text=True,
                   timeout=400)
 
