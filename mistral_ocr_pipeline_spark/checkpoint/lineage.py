@@ -142,7 +142,6 @@ def run_extraction(
     n_buckets: int = DEFAULT_N_BUCKETS,
     only_buckets: set[int] | None = None,
     num_partitions: int | None = None,
-    audit_sample: int = 100,
 ) -> dict:
     """One (possibly resumed) extraction run.
 
@@ -152,9 +151,8 @@ def run_extraction(
     total_rows, total_failures}; when every wanted bucket has committed
     it returns them before planning anything.
 
-    ``audit_sample``: 0 disables the write audit; any positive value
-    audits every staged footer (``_footer_mismatches``) before anything
-    publishes.  Rows/bytes/failures per bucket come from
+    Every staged footer is audited (``_footer_mismatches``) before
+    anything publishes.  Rows/bytes/failures per bucket come from
     ``DataFrame.observe`` DURING the write and the audit reads footers
     only — at 100 TB a read-back would be a second complete scan of the
     output per run (r01 design flaw)."""
@@ -175,10 +173,7 @@ def run_extraction(
 
     src = with_conv_bucket(input_df, n_buckets).filter(F.col("conv_bucket").isin(todo))
     started_at = datetime.now(timezone.utc)
-    extracted = extract_transcripts(
-        src.select("conv_id", "turn_idx", "role", "text", "tool", "ts"),
-        num_partitions=num_partitions,
-    )
+    extracted = extract_transcripts(src, num_partitions=num_partitions)
     out = with_conv_bucket(extracted, n_buckets)
 
     # per-bucket rows/bytes/failures ride the WRITE pass via observe():
@@ -215,7 +210,7 @@ def run_extraction(
         catalog.discard_staged(data_snap)
         return summary
     snap_dir = os.path.join(catalog.warehouse, data_snap)
-    bad = _footer_mismatches(snap_dir, rows) if audit_sample > 0 else {}
+    bad = _footer_mismatches(snap_dir, rows)
     if bad:
         catalog.discard_staged(data_snap)
         raise RuntimeError(

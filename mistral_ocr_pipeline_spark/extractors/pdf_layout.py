@@ -61,8 +61,6 @@ SECTION_VOCAB: dict[str, tuple[str, ...]] = {
     "ack": ("acknowledgements", "acknowledgments", "acknowledgment", "funding"),
     "refs": ("references", "bibliography", "works cited", "literature cited"),
 }
-# sections dropped by the planner; value = section that ends the drop
-_DROP_UNTIL = {"refs": None, "ack": "refs", "intro": "methods"}
 
 
 def _token_set_ratio(a: str, b: str) -> float:

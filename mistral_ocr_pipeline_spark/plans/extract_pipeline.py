@@ -7,9 +7,12 @@ Design points, per the north rule:
 
 * **No per-row Python in Spark's pipeline** — extraction runs inside one
   ``mapInArrow`` stage: ``pyarrow.RecordBatch`` in, ``RecordBatch`` out,
-  no pandas in between.  Each batch is routed with ``pyarrow.compute``:
-  tool-less turns that are blank (``empty``) or cannot be HTML (``plain``)
-  are computed as whole Arrow columns; only tool, HTML-candidate and
+  no pandas in between.  Spark bounds each input batch by
+  ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows and
+  ``maxBytesPerBatch`` bytes (a batch ends with the row that crosses the
+  byte bound).  Each batch is routed with ``pyarrow.compute``: tool-less
+  turns that are blank (``empty``) or cannot be HTML (``plain``) are
+  computed as whole Arrow columns; only tool, HTML-candidate and
   PDF-layout rows reach the per-row kernel ``extract_turn``, whose
   per-document loops live inside the batch (same contract as lxml/NumPy
   inner loops).
@@ -17,7 +20,7 @@ Design points, per the north rule:
   turn is independent (the reference re-sorts after unordered completion,
   main.py:203-209, so per-turn parallelism is semantics-preserving), and
   the shuffle key is ``(conv_id, salt(turn_idx))`` so one 10⁶-turn
-  conversation spreads across up to ``n_salts`` tasks.
+  conversation spreads across up to ``N_SALTS`` tasks.
 * **Stable turn ordering** is restored only where an order-sensitive
   derivation needs it (W6): ``with_stable_order`` and
   ``assemble_conversations`` window/sort on ``(conv_id, turn_idx)``.
@@ -69,27 +72,23 @@ EXTRACT_OUTPUT_SCHEMA = T.StructType(
     ]
 )
 
-DEFAULT_N_SALTS = 64
+N_SALTS = 64
 
 
-def salted_repartition(
-    df: DataFrame, num_partitions: int | None = None, n_salts: int = DEFAULT_N_SALTS
-) -> DataFrame:
+def salted_repartition(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
     """Hash-repartition on ``(conv_id, salt)`` with ``salt =
-    pmod(hash(turn_idx), n_salts)``.
+    pmod(hash(turn_idx), N_SALTS)``.
 
     A Zipf-head conversation (FIXTURES.md skew profile: one conv = 50% of
-    turns) fans out over up to ``n_salts`` tasks instead of pinning one;
+    turns) fans out over up to ``N_SALTS`` tasks instead of pinning one;
     AQE skew handling is the runtime backstop.  At 100 TB the same key
     keeps related turns loosely co-located for downstream per-conv ops
     while bounding any single task's share of a hot conversation."""
-    salt = F.pmod(F.hash(F.col("turn_idx")), F.lit(n_salts))
+    salt = F.pmod(F.hash(F.col("turn_idx")), F.lit(N_SALTS))
     if num_partitions:
         return df.repartition(num_partitions, F.col("conv_id"), salt)
     return df.repartition(F.col("conv_id"), salt)
 
-
-MAX_BATCH_PAYLOAD_BYTES = 64 * 1024 * 1024
 
 _PASS_THROUGH = ("conv_id", "turn_idx", "role", "ts")
 _RESULT_FIELDS = [
@@ -99,43 +98,9 @@ _SPANS_TYPE = next(f.type for f in _RESULT_FIELDS if f.name == "spans")
 _BLANK = f"^{WS_CLASS}*$"  # the kernel's `not text.strip(ASCII_WS)`
 
 
-def _byte_bounded(batch: pa.RecordBatch, budget: int) -> Iterator[pa.RecordBatch]:
-    """Split one incoming batch into slices whose summed payload size stays
-    under ``budget`` bytes (SURVEY §7.4.4): Arrow's maxRecordsPerBatch
-    bounds ROWS, but 2048 rows of MB-scale HTML is gigabytes of strings
-    held live while the output batch builds.  Sizes are UTF-8 byte lengths
-    from two ``binary_length`` kernels; slices are zero-copy views."""
-    sizes = pc.add(
-        pc.binary_length(batch["text"]).fill_null(0).cast(pa.int64()),
-        pc.binary_length(batch["tool"]).fill_null(0).cast(pa.int64()),
-    )
-    if (pc.sum(sizes).as_py() or 0) <= budget:
-        yield batch
-        return
-    start = 0
-    acc = 0
-    for i, sz in enumerate(sizes.to_pylist()):
-        if acc and acc + sz > budget:
-            yield batch.slice(start, i - start)
-            start, acc = i, 0
-        acc += sz
-    if start < batch.num_rows:
-        yield batch.slice(start)
-
-
-def _make_extract_batches(budget: int):
-    """Kernel factory: the budget rides in the closure, so it serializes
-    with the UDF and reaches executor workers (a module-level constant
-    would be re-imported fresh there)."""
-
-    def _extract_batches(
-        batches: Iterable[pa.RecordBatch],
-    ) -> Iterator[pa.RecordBatch]:
-        for incoming in batches:
-            for piece in _byte_bounded(incoming, budget):
-                yield _extract_one(piece)
-
-    return _extract_batches
+def _extract_batches(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    for batch in batches:
+        yield _extract_one(batch)
 
 
 def _extract_one(batch: pa.RecordBatch) -> pa.RecordBatch:
@@ -223,9 +188,7 @@ def _columnar(text: pa.Array, plain: pa.Array) -> list[pa.Array]:
 def extract_transcripts(
     df: DataFrame,
     num_partitions: int | None = None,
-    n_salts: int = DEFAULT_N_SALTS,
     repartition: bool | str = "auto",
-    max_batch_payload_bytes: int = MAX_BATCH_PAYLOAD_BYTES,
 ) -> DataFrame:
     """transcripts(conv_id, turn_idx, role, text, tool, ts) → extraction table.
 
@@ -248,10 +211,8 @@ def extract_transcripts(
         target = src.sparkSession.sparkContext.defaultParallelism
         repartition = src.rdd.getNumPartitions() < target
     if repartition:
-        src = salted_repartition(src, num_partitions, n_salts)
-    return src.mapInArrow(
-        _make_extract_batches(max_batch_payload_bytes), EXTRACT_OUTPUT_SCHEMA
-    )
+        src = salted_repartition(src, num_partitions)
+    return src.mapInArrow(_extract_batches, EXTRACT_OUTPUT_SCHEMA)
 
 
 def with_stable_order(df: DataFrame) -> DataFrame:

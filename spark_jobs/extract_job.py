@@ -36,8 +36,8 @@ def main() -> None:
                    help="extraction parallelism (default: cluster default)")
     args = p.parse_args()
 
-    # on a cluster the session comes from spark-submit confs; builder here
-    # only fills local-run defaults
+    # the job runs on Spark's defaults plus the confs spark-submit passes;
+    # the builder sets only the app name
     spark = SparkSession.builder.appName("transcript_extraction").getOrCreate()
 
     from mistral_ocr_pipeline_spark.checkpoint.lineage import run_extraction

@@ -105,9 +105,10 @@ def test_orphan_bucket_dropped_before_resume(spark, tmp_path, input_df):
 
 def test_metrics_do_not_rescan_output(spark, tmp_path, input_df):
     """Lineage rows/bytes/failures come from observe() during the write —
-    with the sampled audit disabled, the output table must never be READ
-    (r01 re-scanned the whole output per run; at 100 TB that is a second
-    full pass).  Metrics must still be faithful."""
+    the output table must never be READ (r01 re-scanned the whole output
+    per run; at 100 TB that is a second full pass).  The write audit reads
+    only the staged Parquet footers, with pyarrow.  Metrics must still be
+    faithful."""
     cat = TableCatalog(spark, str(tmp_path / "wh_e"))
     reads = []
     orig_read = cat.read
@@ -117,9 +118,7 @@ def test_metrics_do_not_rescan_output(spark, tmp_path, input_df):
         return orig_read(table)
 
     cat.read = spy_read
-    run_extraction(
-        spark, cat, input_df, run_id="r1", n_buckets=N_BUCKETS, audit_sample=0
-    )
+    run_extraction(spark, cat, input_df, run_id="r1", n_buckets=N_BUCKETS)
     assert "extracted" not in reads, reads
     cat.read = orig_read
     lineage = cat.read("run_partitions").collect()

@@ -65,7 +65,7 @@ class TestGoldenEquality:
 
     def test_order_independence_of_salting(self, spark, unit_rows):
         """Salted repartition (shuffle) must not change any per-turn result."""
-        a = _spark_rows(spark, unit_rows, repartition=True, n_salts=8)
+        a = _spark_rows(spark, unit_rows, repartition=True)
         b = _spark_rows(spark, unit_rows, repartition=False)
         assert a == b
 
@@ -83,7 +83,7 @@ class TestConversationAssembly:
         shuffle arrival order (reference main.py:203-216 re-sort contract)."""
         rows = gen_transcripts(5, (3, 9), seed=13, profile="tiny")
         df = spark.createDataFrame(rows, schema=transcripts_schema())
-        ext = extract_transcripts(df, n_salts=4)
+        ext = extract_transcripts(df)
         conv = assemble_conversations(ext).orderBy("conv_id").collect()
 
         golden = {}
@@ -109,35 +109,48 @@ class TestConversationAssembly:
 
 
 class TestByteBoundedRebatch:
+    """Spark, not the engine, bounds the bytes of each batch the extraction
+    stage receives: ``spark.sql.execution.arrow.maxBytesPerBatch`` ends a
+    batch with the row that crosses it."""
+
+    KEY = "spark.sql.execution.arrow.maxBytesPerBatch"
+
     def test_split_preserves_rows_and_bounds(self, spark):
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        from mistral_ocr_pipeline_spark.plans import extract_pipeline as ep
+        sql_conf = spark._jsparkSession.sessionState().conf()
+        assert sql_conf.arrowMaxBytesPerBatch() <= 64 * 1024 * 1024
 
-        batch = pa.RecordBatch.from_pydict(
-            {
-                "conv_id": [f"c{i}" for i in range(10)],
-                "turn_idx": pa.array(range(10), pa.int32()),
-                "role": ["u"] * 10,
-                "text": ["x" * 3_000_000] * 9 + [None],  # 27 MB total + null
-                "tool": pa.array([None] * 10, pa.string()),
-                "ts": pa.array([None] * 10, pa.timestamp("us", tz="UTC")),
-            }
-        )
-        slices = list(ep._byte_bounded(batch, 10_000_000))
-        # rows preserved in order, each slice under budget (or single row)
-        assert sum(s.num_rows for s in slices) == 10 and len(slices) >= 3
-        assert [c for s in slices for c in s.column("conv_id").to_pylist()] == (
-            batch.column("conv_id").to_pylist()
-        )
-        for s in slices:
-            payload = pc.sum(pc.binary_length(s.column("text"))).as_py() or 0
-            assert payload <= 10_000_000 or s.num_rows == 1
+        def census(batches):
+            for i, b in enumerate(batches):
+                sizes = pc.binary_length(b["text"]).fill_null(0).cast(pa.int64())
+                seq = pa.array([i] * b.num_rows, pa.int64())
+                yield pa.RecordBatch.from_arrays(
+                    [seq, b["conv_id"], sizes], names=["batch", "conv_id", "size"]
+                )
+
+        t = spark.createDataFrame(
+            [(f"c{i}", "x" * 3_000_000 if i < 9 else None) for i in range(10)],
+            "conv_id string, text string",  # 27 MB total + null
+        ).coalesce(1)
+        prior = spark.conf.get(self.KEY)
+        try:
+            spark.conf.set(self.KEY, "10000000")
+            rows = t.mapInArrow(census, "batch long, conv_id string, size long").collect()
+        finally:
+            spark.conf.set(self.KEY, prior)
+        # rows preserved in order; each batch is under the bound until its
+        # last row (or is that one row)
+        assert [r.conv_id for r in rows] == [f"c{i}" for i in range(10)]
+        batches = {}
+        for r in rows:
+            batches.setdefault(r.batch, []).append(r.size)
+        assert len(batches) >= 3
+        for sizes in batches.values():
+            assert sum(sizes[:-1]) < 10_000_000, sizes
 
     def test_extraction_output_independent_of_budget(self, spark):
-        from pyspark.sql import functions as F
-
         from mistral_ocr_pipeline_spark.plans import extract_pipeline as ep
 
         t = spark.createDataFrame(
@@ -145,19 +158,23 @@ class TestByteBoundedRebatch:
              for i in range(50)],
             "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
         )
-        big = {
-            (r.conv_id, r.turn_idx): r.extracted_text
-            for r in ep.extract_transcripts(t, repartition=False).collect()
-        }
-        # a 1000-byte budget forces many sub-batches INSIDE the executor
-        # workers (the budget travels in the UDF closure)
-        small = {
-            (r.conv_id, r.turn_idx): r.extracted_text
-            for r in ep.extract_transcripts(
-                t, repartition=False, max_batch_payload_bytes=1000
-            ).collect()
-        }
-        assert big == small and len(big) == 50
+        prior = spark.conf.get(self.KEY)
+        for repartition in (True, False):
+            big = {
+                (r.conv_id, r.turn_idx): r.extracted_text
+                for r in ep.extract_transcripts(t, repartition=repartition).collect()
+            }
+            # a 1000-byte bound cuts the input into many batches before
+            # they reach the Python workers
+            try:
+                spark.conf.set(self.KEY, "1000")
+                small = {
+                    (r.conv_id, r.turn_idx): r.extracted_text
+                    for r in ep.extract_transcripts(t, repartition=repartition).collect()
+                }
+            finally:
+                spark.conf.set(self.KEY, prior)
+            assert big == small and len(big) == 50, repartition
 
 
 class TestArrowBoundary:
