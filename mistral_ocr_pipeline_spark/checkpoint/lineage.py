@@ -29,11 +29,11 @@ catalogs whose data/lineage got out of sync through external surgery
 orphan bucket dirs (metadata-only, hardlinks) before reprocessing.
 Lineage rows are written with pyarrow and totals are prior lineage plus
 observed values, so, as in an Iceberg commit, nothing is read back: the
-staged output write is a run's only Spark job."""
+staged output write is a run's only Spark job.  Lineage reads file lists
+from the catalog (``TableCatalog.files``), never directories."""
 
 from __future__ import annotations
 
-import glob
 import os
 import uuid
 from datetime import datetime, timezone
@@ -80,11 +80,11 @@ def with_conv_bucket(df: DataFrame, n_buckets: int = DEFAULT_N_BUCKETS) -> DataF
 def _read_lineage(catalog: TableCatalog, lineage_table: str) -> tuple[set[int], int, int]:
     """(committed buckets, total rows, total failures) of the current
     lineage snapshot, read on the driver — no Spark job."""
-    if not catalog.exists(lineage_table):
+    files = catalog.files(lineage_table)
+    if not files:
         return set(), 0, 0
     t = pq.read_table(
-        catalog.data_path(lineage_table),
-        columns=["conv_bucket", "rows", "failures", "status"],
+        files, columns=["conv_bucket", "rows", "failures", "status"]
     ).to_pydict()
     committed = {b for b, s in zip(t["conv_bucket"], t["status"]) if s == "committed"}
     return committed, sum(t["rows"]), sum(t["failures"])
@@ -92,6 +92,12 @@ def _read_lineage(catalog: TableCatalog, lineage_table: str) -> tuple[set[int], 
 
 def committed_buckets(catalog: TableCatalog, lineage_table: str) -> set[int]:
     return _read_lineage(catalog, lineage_table)[0]
+
+
+def _bucket_of(path: str) -> int | None:
+    """``N`` of the ``conv_bucket=N`` dir holding a data file, else None."""
+    col, _, val = os.path.basename(os.path.dirname(path)).partition("=")
+    return int(val) if col == "conv_bucket" else None
 
 
 def _drop_orphan_buckets(
@@ -102,13 +108,8 @@ def _drop_orphan_buckets(
     this cannot arise from a kill (data+lineage publish atomically); it
     covers externally-desynced catalogs.  The drop is a new snapshot
     omitting the orphan dirs — metadata-only, no data rewrite."""
-    data_dir = catalog.data_path(output_table)
-    if data_dir is None or not os.path.isdir(data_dir):
-        return []
-    buckets = [
-        int(e.split("=", 1)[1]) for e in os.listdir(data_dir) if e.startswith("conv_bucket=")
-    ]
-    orphans = [b for b in buckets if b not in committed]
+    buckets = {_bucket_of(f) for f in catalog.files(output_table)} - {None}
+    orphans = sorted(buckets - committed)
     if orphans:
         catalog.drop_partition_dirs(
             output_table, [f"conv_bucket={b}" for b in orphans]
@@ -116,20 +117,21 @@ def _drop_orphan_buckets(
     return orphans
 
 
-def _footer_mismatches(snap_dir: str, lineage_rows: list[dict]) -> dict[int, tuple]:
+def _footer_mismatches(
+    catalog: TableCatalog, table: str, snap: str, lineage_rows: list[dict]
+) -> dict[int, tuple]:
     """bucket → (staged, observed) rows for each new bucket whose staged
     Parquet footers do not sum to the rows ``observe()`` counted — a
     missing or short file shows here; only footers are read, never data
     pages.  New buckets were uncommitted and orphan-free, so every file
-    under their staged dirs is this run's."""
-    bad = {}
-    for r in lineage_rows:
-        b = r["conv_bucket"]
-        files = glob.glob(os.path.join(snap_dir, f"conv_bucket={b}", "*.parquet"))
-        staged = sum(pq.read_metadata(f).num_rows for f in files)
-        if staged != r["rows"]:
-            bad[b] = (staged, r["rows"])
-    return bad
+    of the staged snapshot in one of their dirs is this run's."""
+    observed = {r["conv_bucket"]: r["rows"] for r in lineage_rows}
+    staged = dict.fromkeys(observed, 0)
+    for f in catalog.files(table, snap):
+        b = _bucket_of(f)
+        if b in staged:
+            staged[b] += pq.read_metadata(f).num_rows
+    return {b: (staged[b], n) for b, n in observed.items() if staged[b] != n}
 
 
 def run_extraction(
@@ -209,8 +211,7 @@ def run_extraction(
     if not rows:
         catalog.discard_staged(data_snap)
         return summary
-    snap_dir = os.path.join(catalog.warehouse, data_snap)
-    bad = _footer_mismatches(snap_dir, rows)
+    bad = _footer_mismatches(catalog, output_table, data_snap, rows)
     if bad:
         catalog.discard_staged(data_snap)
         raise RuntimeError(

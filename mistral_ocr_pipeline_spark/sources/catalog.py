@@ -33,6 +33,10 @@ Commit protocol (real snapshot isolation, not an approximation):
 * superseded snapshots stay readable (``read(table,
   snapshot="snap-…")`` = time travel) until ``expire_snapshots``.
 
+``files(table, snapshot=None)`` is the one way to list a snapshot's data
+files: readers such as checkpoint/lineage.py get file lists, never
+directories, as Iceberg readers get a manifest's.
+
 Concurrency — same-host MULTI-WRITER is supported: writers (processes
 or threads) serialize the pointer swap through an exclusive ``flock``
 on a persistent lockfile (kernel-released on crash, no staleness
@@ -60,6 +64,7 @@ import os
 import shutil
 import time
 import uuid
+from collections.abc import Collection, Iterator
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -223,30 +228,37 @@ class TableCatalog:
         return os.path.join(self.warehouse, rel) if rel else None
 
     @staticmethod
-    def _has_parquet(p: str | None) -> bool:
-        return bool(p) and os.path.isdir(p) and any(
-            f.endswith(".parquet") or f.startswith("part-")
-            for _root, _d, files in os.walk(p)
-            for f in files
+    def _files(base: str, skip_snapshots: bool = False) -> Iterator[str]:
+        """Relpaths of the data files under ``base``, lazily (``exists``
+        stops at the first): every file whose name does not start with
+        ``_`` or ``.`` (Spark's reader rule: no ``_SUCCESS`` or ``.crc``).
+        ``skip_snapshots`` prunes ``snap-*`` dirs (staged or historical
+        snapshots under a table root)."""
+        for root, dirs, names in os.walk(base):
+            if skip_snapshots:
+                dirs[:] = [d for d in dirs if not d.startswith("snap-")]
+            sub = os.path.relpath(root, base)
+            prefix = "" if sub == "." else sub + os.sep
+            yield from (prefix + f for f in names if not f.startswith(("_", ".")))
+
+    def files(self, table: str, snapshot: str | None = None) -> list[str]:
+        """Sorted absolute paths of the data files of ``table``'s current
+        snapshot or of ``snapshot`` (staged or committed, ``snap-…`` or
+        ``table/snap-…``); ``[]`` for a table never committed."""
+        rel = self.current_tables().get(table) if snapshot is None else (
+            snapshot if "/" in snapshot else f"{table}/{snapshot}"
         )
+        if rel is None:
+            return []
+        base = os.path.join(self.warehouse, rel)
+        return sorted(os.path.join(base, f) for f in self._files(base))
 
     def exists(self, table: str) -> bool:
-        if table in self.current_tables():
-            return self._has_parquet(self.data_path(table))
-        # bucketed/legacy tables: files directly under the table root —
-        # anything under a snap-* dir (at ANY depth: partitioned snapshots
-        # nest) is staged-or-historical, not the table, so an uncommitted
-        # staged snapshot must not make the table "exist"
-        root = self.path(table)
-        if not os.path.isdir(root):
-            return False
-        for r, dirs, files in os.walk(root):
-            dirs[:] = [d for d in dirs if not d.startswith("snap-")]
-            if any(
-                f.endswith(".parquet") or f.startswith("part-") for f in files
-            ):
-                return True
-        return False
+        rel = self.current_tables().get(table)
+        # bucketed/legacy tables: files directly under the table root; a
+        # staged-but-uncommitted snapshot must not make the table "exist"
+        base = os.path.join(self.warehouse, rel) if rel else self.path(table)
+        return next(self._files(base, skip_snapshots=rel is None), None) is not None
 
     def read(
         self,
@@ -315,46 +327,46 @@ class TableCatalog:
         # re-resolved current: a concurrent commit mid-write must surface
         # as a base-validation conflict, not be silently half-linked)
         base = self._staged_bases.get(rel)
-        cur = os.path.join(self.warehouse, base) if base else None
-        if cur and os.path.isdir(cur):
-            snap_dir = os.path.join(self.warehouse, rel)
+        if base:
             try:
-                for root, _dirs, files in os.walk(cur):
-                    sub = os.path.relpath(root, cur)
-                    dest = (
-                        snap_dir if sub == "." else os.path.join(snap_dir, sub)
-                    )
-                    os.makedirs(dest, exist_ok=True)
-                    for f in files:
-                        if f.startswith(("_", ".")):
-                            continue
-                        dst = os.path.join(dest, f)
-                        if os.path.exists(dst):
-                            # the new write produced a file with the same
-                            # relative path as a prior-snapshot file;
-                            # skipping it would silently drop historical
-                            # rows from the snapshot (improbable with
-                            # Spark's UUID part names, which is exactly
-                            # why it must fail loudly)
-                            raise FileExistsError(
-                                f"stage_append name collision for table "
-                                f"{table!r}: {os.path.join(sub, f)} exists "
-                                "in both the new write and the current "
-                                "snapshot"
-                            )
-                        os.link(os.path.join(root, f), dst)
+                self._link_forward(base, rel)
             except FileExistsError:
                 # don't leave a half-linked staged dir for vacuum to age
                 # out — the snapshot was never returned, so nothing can
                 # reference it
                 self.discard_staged(rel)
-                self._staged_bases.pop(rel, None)
                 raise
         return rel
+
+    def _link_forward(self, base: str, rel: str, skip: Collection[str] = ()) -> None:
+        """Hardlink snapshot ``base``'s data files into snapshot ``rel``
+        under the same relpaths, minus the top-level dirs in ``skip``.  A
+        relpath ``rel`` already holds raises ``FileExistsError``: skipping
+        it would silently drop historical rows (improbable with Spark's
+        UUID part names, which is exactly why it must fail loudly)."""
+        src = os.path.join(self.warehouse, base)
+        dst = os.path.join(self.warehouse, rel)
+        os.makedirs(dst, exist_ok=True)
+        made = {""}
+        for f in self._files(src):
+            d = os.path.dirname(f)
+            if d.split(os.sep, 1)[0] in skip:
+                continue
+            if d not in made:
+                os.makedirs(os.path.join(dst, d), exist_ok=True)
+                made.add(d)
+            try:
+                os.link(os.path.join(src, f), os.path.join(dst, f))
+            except FileExistsError as e:
+                raise FileExistsError(
+                    f"name collision staging table {rel.split('/', 1)[0]!r}: "
+                    f"{f} exists in both the new write and snapshot {base}"
+                ) from e
 
     def discard_staged(self, snap_rel: str) -> None:
         """Delete a staged-but-never-committed snapshot."""
         shutil.rmtree(os.path.join(self.warehouse, snap_rel), ignore_errors=True)
+        self._staged_bases.pop(snap_rel, None)
 
     # -- public write API --------------------------------------------------
     def append(self, df: DataFrame, table: str, partition_by: list[str] | None = None) -> None:
@@ -383,7 +395,6 @@ class TableCatalog:
                 return self.commit({table: rel})
             except CommitConflictError:
                 self.discard_staged(rel)
-                self._staged_bases.pop(rel, None)
                 if attempt == max_retries:
                     raise
         raise AssertionError("unreachable")
@@ -399,24 +410,11 @@ class TableCatalog:
         """Publish a new snapshot omitting the named top-level partition
         dirs (e.g. ``conv_bucket=3``) — hardlinks for everything kept, so
         this is a metadata-only delete, no data rewrite."""
-        cur = self.data_path(table)
-        if cur is None or not os.path.isdir(cur):
-            return
         base = self.current_tables().get(table)
-        snap = f"snap-{uuid.uuid4().hex}"
-        snap_dir = os.path.join(self.path(table), snap)
-        skip = set(dirnames)
-        for root, dirs, files in os.walk(cur):
-            sub = os.path.relpath(root, cur)
-            if sub != "." and sub.split(os.sep, 1)[0] in skip:
-                continue
-            dest = snap_dir if sub == "." else os.path.join(snap_dir, sub)
-            os.makedirs(dest, exist_ok=True)
-            for f in files:
-                if f.startswith(("_", ".")):
-                    continue
-                os.link(os.path.join(root, f), os.path.join(dest, f))
-        rel = f"{table}/{snap}"
+        if base is None or not self.files(table, base):
+            return
+        rel = f"{table}/snap-{uuid.uuid4().hex}"
+        self._link_forward(base, rel, skip=set(dirnames))
         self._staged_bases[rel] = base
         self.commit({table: rel})
 
@@ -509,15 +507,9 @@ class TableCatalog:
         twin: ``rewrite_data_files`` + ``expire_snapshots``."""
         import math
 
-        data_dir = self.data_path(table)
-        n_files = 0
-        total_bytes = 0
-        if data_dir:
-            for root, _d, files in os.walk(data_dir):
-                for f in files:
-                    if not f.startswith(("_", ".")):
-                        n_files += 1
-                        total_bytes += os.path.getsize(os.path.join(root, f))
+        files = self.files(table)
+        n_files = len(files)
+        total_bytes = sum(os.path.getsize(f) for f in files)
         target = max(1, math.ceil(total_bytes / target_file_bytes))
         # merge_schema: an evolved table's snapshot holds files of mixed
         # shapes — the compaction rewrite must carry the UNION schema, and
@@ -530,14 +522,7 @@ class TableCatalog:
         self.overwrite(df, table, partition_by=partition_by)
         if expire:
             self.expire_snapshots(table, keep_last=1)
-        new_dir = self.data_path(table)
-        n_after = sum(
-            1
-            for root, _d, files in os.walk(new_dir)
-            for f in files
-            if not f.startswith(("_", "."))
-        ) if new_dir else 0
-        return {"files_before": n_files, "files_after": n_after,
+        return {"files_before": n_files, "files_after": len(self.files(table)),
                 "bytes": total_bytes}
 
     # -- bucketed tables (co-located joins) --------------------------------
@@ -615,14 +600,7 @@ class TableCatalog:
                     f"snapshot {rel!r} not on disk (expired?); "
                     "incremental read impossible — do a full read"
                 )
-            out: set[str] = set()
-            for root, _dirs, files in os.walk(base):
-                for f in files:
-                    if f.endswith(".parquet"):
-                        out.add(
-                            os.path.relpath(os.path.join(root, f), base)
-                        )
-            return out
+            return set(self._files(base))
 
         cur_files = data_files(cur)
         old_files = data_files(since)
@@ -677,8 +655,6 @@ class TableCatalog:
         ``validate_unique`` (one cheap agg over the SOURCE batch) raises
         when ``df`` carries duplicate keys — Iceberg rejects multi-row
         matches for the same reason: "both rows win" is not a meaning."""
-        from pyspark.sql import functions as F
-
         if validate_unique:
             dup = (
                 df.groupBy(*key_cols)
@@ -705,22 +681,12 @@ class TableCatalog:
         self._commit_cow(merged, table, base, partition_by)
 
     def _current_partition_cols(self, table: str) -> list[str]:
-        """Partition columns of the CURRENT snapshot, inferred from its
-        hive-style ``col=value`` directory layout (the catalog keeps no
+        """Partition columns of the CURRENT snapshot: the ``col=value`` dirs
+        in the relpath of any of its data files (the catalog keeps no
         layout metadata; the layout IS the directories)."""
-        dp = self.data_path(table)
-        cols: list[str] = []
-        d = dp
-        while d and os.path.isdir(d):
-            sub = [
-                s for s in sorted(os.listdir(d))
-                if "=" in s and os.path.isdir(os.path.join(d, s))
-            ]
-            if not sub:
-                break
-            cols.append(sub[0].split("=", 1)[0])
-            d = os.path.join(d, sub[0])
-        return cols
+        rel = self.current_tables().get(table)
+        first = next(self._files(os.path.join(self.warehouse, rel)), "") if rel else ""
+        return [p.split("=", 1)[0] for p in first.split(os.sep)[:-1] if "=" in p]
 
     def _commit_cow(
         self,

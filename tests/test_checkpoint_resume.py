@@ -5,6 +5,7 @@ buckets, lineage metrics recorded per partition."""
 import os
 import time
 from datetime import timedelta
+from urllib.parse import urlparse
 
 import pyarrow.parquet as pq
 import pytest
@@ -898,3 +899,75 @@ class TestDiffSnapshots:
         s1 = cat.current_tables()["t"]
         assert cat.diff_snapshots("t", s1, key_cols=["k"]).count() == 0
         assert cat.diff_snapshots("t", s1).count() == 0
+
+
+def _scanned(df):
+    """Local paths of the files a Spark read of ``df`` scans."""
+    return {urlparse(f).path for f in df.inputFiles()}
+
+
+def test_files_lists_what_spark_scans(spark, tmp_path):
+    """``files()`` is the one listing of a snapshot: exactly the files
+    Spark's reader scans (never ``_SUCCESS`` or ``.crc``), and a staged
+    snapshot only when it is named."""
+    wh = str(tmp_path / "wh_files")
+    cat = TableCatalog(spark, wh)
+    schema = "id long, b int"
+    cat.append(spark.createDataFrame([(i, i % 3) for i in range(6)], schema), "t", ["b"])
+    first = cat.current_tables()["t"]
+    cat.append(spark.createDataFrame([(i, i % 3) for i in range(6, 9)], schema), "t", ["b"])
+    cat.drop_partition_dirs("t", ["b=1"])
+
+    # the first snapshot was written by Spark: its dirs hold _SUCCESS and
+    # .crc files beside the data files
+    on_disk = {f for _r, _d, fs in os.walk(os.path.join(wh, first)) for f in fs}
+    assert "_SUCCESS" in on_disk and any(f.endswith(".crc") for f in on_disk)
+    for snap, df in ((None, cat.read("t")), (first, cat.read("t", snapshot=first.split("/")[1]))):
+        listed = cat.files("t", snap)
+        assert listed and set(listed) == _scanned(df)
+        assert not any(os.path.basename(f).startswith(("_", ".")) for f in listed)
+    assert not any("/b=1/" in f for f in cat.files("t"))
+    assert cat.read("t").count() == 6
+
+    staged = cat.stage_append(spark.createDataFrame([(9, 0)], schema), "t", ["b"])
+    in_staged = cat.files("t", snapshot=staged)
+    assert in_staged == cat.files("t", snapshot=staged.split("/")[1])
+    assert len(in_staged) > len(cat.files("t"))
+    assert not set(in_staged) & set(cat.files("t"))
+    assert all(f.startswith(os.path.join(wh, staged) + os.sep) for f in in_staged)
+    assert _scanned(cat.read("t")) == set(cat.files("t"))
+
+    # a table with only a staged snapshot does not exist, and lists nothing
+    only = cat.stage_overwrite(spark.createDataFrame([(1, 1)], schema), "u")
+    assert not cat.exists("u") and cat.files("u") == []
+    assert cat.files("u", snapshot=only)
+
+
+class _CollidingCatalog(TableCatalog):
+    """Its staged writes already hold one of the current snapshot's files
+    under the same relpath: the collision the carry-forward must refuse."""
+
+    def __init__(self, spark, warehouse):
+        super().__init__(spark, warehouse)
+        self.staged = []
+
+    def stage_overwrite(self, df, table, partition_by=None):
+        rel = super().stage_overwrite(df, table, partition_by)
+        self.staged.append(rel)
+        base_dir = os.path.join(self.warehouse, self.current_tables()[table])
+        victim = self.files(table)[0]
+        os.link(victim, os.path.join(self.warehouse, rel, os.path.relpath(victim, base_dir)))
+        return rel
+
+
+def test_stage_append_name_collision_discards_staged(spark, tmp_path):
+    wh = str(tmp_path / "wh_collide")
+    TableCatalog(spark, wh).append(spark.createDataFrame([(1,), (2,)], "id long"), "t")
+    cat = _CollidingCatalog(spark, wh)
+    victim = os.path.basename(cat.files("t")[0])
+    with pytest.raises(FileExistsError, match=f"'t'.*{victim}"):
+        cat.stage_append(spark.createDataFrame([(3,)], "id long"), "t")
+    (rel,) = cat.staged
+    assert not os.path.exists(os.path.join(wh, rel))
+    assert rel not in cat._staged_bases
+    assert sorted(r.id for r in cat.read("t").collect()) == [1, 2]
