@@ -19,37 +19,47 @@ of extraction, and recomputes nothing that committed.
 
 Commit protocol (write-audit-publish, SURVEY.md §7.4.6): a batch's data
 files AND its lineage rows are staged as unreferenced snapshots, the
-staged data is audited (per bucket, the staged Parquet footers' row
-counts must equal the rows ``observe()`` counted during the write), and
-both publish in ONE atomic catalog commit (``TableCatalog.commit`` — a
-single ``_HEAD`` pointer swap).  A kill at any instant leaves either both
-visible or neither; the orphan-drop below remains as defense-in-depth for
-catalogs whose data/lineage got out of sync through external surgery
-(e.g. a partial restore), publishing a new data snapshot that omits the
-orphan bucket dirs (metadata-only, hardlinks) before reprocessing.
-Lineage rows are written with pyarrow and totals are prior lineage plus
-observed values, so, as in an Iceberg commit, nothing is read back: the
-staged output write is a run's only Spark job.  Lineage reads file lists
-from the catalog (``TableCatalog.files``), never directories."""
+staged data is audited, and both publish in ONE atomic catalog commit
+(``TableCatalog.commit`` — a single ``_HEAD`` pointer swap).  A kill at
+any instant leaves either both visible or neither; the orphan-drop below
+remains as defense-in-depth for catalogs whose data/lineage got out of
+sync through external surgery (e.g. a partial restore), publishing a new
+data snapshot that omits the orphan bucket dirs (metadata-only,
+hardlinks) before reprocessing.
+
+A run's only Spark job is one extract-and-write stage: its ``mapInArrow``
+tasks extract each Arrow batch and write its rows to ``conv_bucket=N/``
+Parquet files with pyarrow — no conversion to Spark rows, no write sort,
+no parquet-mr — under the staged snapshot's hidden ``_pending/`` dir, and
+return one metadata row per file (bucket, path, rows, bytes, failures,
+task clocks).  The driver moves the reported files into the snapshot's
+bucket dirs, so what a failed or speculative attempt wrote stays hidden,
+and audits the staged snapshot against those rows: the same files under
+this run's bucket dirs, each with the reported row count in its footer.
+Lineage rows are built from the metadata rows and written with pyarrow,
+and totals are prior lineage plus reported values, so, as in an Iceberg
+commit, nothing is read back.  Lineage reads file lists from the
+catalog (``TableCatalog.files``), never directories."""
 
 from __future__ import annotations
 
 import os
+import shutil
+import time
 import uuid
+from collections.abc import Iterable, Iterator
 from datetime import datetime, timezone
+from functools import partial
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
-from pyspark.sql import (
-    DataFrame,
-    Observation,
-    SparkSession,
-    functions as F,
-    types as T,
-)
+from pyspark import TaskContext
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from mistral_ocr_pipeline_spark.plans.extract_pipeline import extract_transcripts
+from mistral_ocr_pipeline_spark.plans.extract_pipeline import _extract_one, stage_input
 from mistral_ocr_pipeline_spark.sources.catalog import TableCatalog
 
 LINEAGE_SCHEMA = T.StructType(
@@ -67,6 +77,27 @@ LINEAGE_SCHEMA = T.StructType(
 )
 # times are timestamp("us", tz="UTC"): no session timezone can shift them
 _LINEAGE_ARROW = to_arrow_schema(LINEAGE_SCHEMA)
+
+# one row per Parquet file run_extraction's stage writes; ``path`` is
+# relative to the snapshot (``conv_bucket=N/part-….parquet``)
+_FILE_SCHEMA = T.StructType(
+    [
+        T.StructField("conv_bucket", T.IntegerType(), False),
+        T.StructField("path", T.StringType(), False),
+        T.StructField("rows", T.LongType(), False),
+        T.StructField("bytes", T.LongType(), False),
+        T.StructField("failures", T.LongType(), False),
+        T.StructField("started", T.DoubleType(), False),
+        T.StructField("finished", T.DoubleType(), False),
+    ]
+)
+_FILE_ARROW = to_arrow_schema(_FILE_SCHEMA)
+# Parquet codecs pyarrow writes, by the names Spark's codec conf uses
+_PYARROW_CODECS = frozenset({"none", "snappy", "gzip", "brotli", "lz4", "zstd"})
+# parquet-mr's default zstd level, which Spark's write used (pyarrow's is
+# 1); with no Arrow schema in each footer (``store_schema=False``, Spark
+# reads the Parquet schema) the files are no larger than Spark's were
+_ZSTD_LEVEL = 3
 
 DEFAULT_N_BUCKETS = 16
 
@@ -117,21 +148,136 @@ def _drop_orphan_buckets(
     return orphans
 
 
-def _footer_mismatches(
-    catalog: TableCatalog, table: str, snap: str, lineage_rows: list[dict]
-) -> dict[int, tuple]:
-    """bucket → (staged, observed) rows for each new bucket whose staged
-    Parquet footers do not sum to the rows ``observe()`` counted — a
-    missing or short file shows here; only footers are read, never data
-    pages.  New buckets were uncommitted and orphan-free, so every file
-    of the staged snapshot in one of their dirs is this run's."""
-    observed = {r["conv_bucket"]: r["rows"] for r in lineage_rows}
-    staged = dict.fromkeys(observed, 0)
-    for f in catalog.files(table, snap):
-        b = _bucket_of(f)
-        if b in staged:
-            staged[b] += pq.read_metadata(f).num_rows
-    return {b: (staged[b], n) for b, n in observed.items() if staged[b] != n}
+def _pyarrow_codec(spark: SparkSession) -> str:
+    """pyarrow's name for the session's ``spark.sql.parquet.compression.codec``,
+    checked on the driver: a codec pyarrow cannot write (``lzo``,
+    ``lz4_raw``) fails here, before any task starts."""
+    codec = spark.conf.get("spark.sql.parquet.compression.codec")
+    name = {"uncompressed": "none"}.get(codec, codec)
+    if name not in _PYARROW_CODECS:
+        raise ValueError(
+            f"spark.sql.parquet.compression.codec={codec!r}: run_extraction writes "
+            f"with pyarrow, which supports {sorted(_PYARROW_CODECS)} (or 'uncompressed')"
+        )
+    return name
+
+
+def _write_buckets(
+    pending: str, codec: str, budget: int, batches: Iterable[pa.RecordBatch]
+) -> Iterator[pa.RecordBatch]:
+    """``mapInArrow`` function of ``run_extraction``'s one stage: extract
+    each batch with ``_extract_one`` and write its rows to one Parquet file
+    per ``conv_bucket`` this task sees,
+    ``conv_bucket=N/part-<partition>-<attempt>-<uuid>.parquet`` under
+    ``pending`` (the bucket lives only in the directory name).
+
+    Each bucket's slices are held until the task holds more than
+    ``budget`` bytes of output (one input batch's byte bound); then the
+    largest bucket's slices are written as one row group, and at the end
+    each bucket's rest.  A task whose output fits the budget thus writes
+    one row group per file and has one file open at a time, as Spark's
+    sorted write does; only the buckets written early keep a writer open.
+    Yields one metadata row per file: bucket, relpath, rows, UTF-8 bytes
+    of ``extracted_text`` + ``md``, failures, and the task's start and
+    finish clocks (epoch seconds)."""
+    started = time.time()
+    ctx = TaskContext.get()
+    prefix = f"part-{ctx.partitionId():05d}-{ctx.attemptNumber()}"
+    meta: dict[int, dict] = {}
+    held: dict[int, list[pa.RecordBatch]] = {}
+    held_bytes: dict[int, int] = {}
+    writers: dict[int, pq.ParquetWriter] = {}
+
+    def flush(b: int) -> None:
+        part = pa.Table.from_batches(held.pop(b))
+        del held_bytes[b]
+        if b not in writers:
+            meta[b]["path"] = f"conv_bucket={b}/{prefix}-{uuid.uuid4()}.parquet"
+            os.makedirs(os.path.join(pending, f"conv_bucket={b}"), exist_ok=True)
+            writers[b] = pq.ParquetWriter(
+                os.path.join(pending, meta[b]["path"]), part.schema, compression=codec,
+                compression_level=_ZSTD_LEVEL if codec == "zstd" else None,
+                store_schema=False,
+            )
+        writers[b].write_table(part)
+
+    try:
+        total = 0
+        for batch in batches:
+            out = _extract_one(batch)
+            buckets = batch["conv_bucket"].to_numpy()
+            for b in np.unique(buckets).tolist():
+                part = out.filter(pa.array(buckets == b))
+                m = meta.setdefault(b, {"conv_bucket": b, "rows": 0, "bytes": 0,
+                                        "failures": 0, "started": started})
+                m["rows"] += part.num_rows
+                m["failures"] += part.num_rows - part["error"].null_count
+                for c in ("extracted_text", "md"):
+                    m["bytes"] += pc.sum(pc.binary_length(part[c])).as_py() or 0
+                held.setdefault(b, []).append(part)
+                held_bytes[b] = held_bytes.get(b, 0) + part.nbytes
+                total += part.nbytes
+            while total > budget:
+                b = max(held_bytes, key=held_bytes.__getitem__)
+                total -= held_bytes[b]
+                flush(b)
+        for b in list(held):
+            flush(b)
+            writers.pop(b).close()
+    finally:
+        for w in writers.values():
+            w.close()
+    finished = time.time()
+    if meta:
+        yield pa.RecordBatch.from_pylist(
+            [{**m, "finished": finished} for m in meta.values()], schema=_FILE_ARROW
+        )
+
+
+def _publish(snap_dir: str, pending: str, files: list) -> dict[str, int]:
+    """Move the files the tasks reported from ``pending`` into their
+    ``conv_bucket=N/`` dirs of the snapshot, then drop ``pending``; returns
+    path → reported rows.  Only the attempts Spark kept report, so a file
+    of a failed, killed or speculative attempt is never moved; under the
+    hidden ``_pending`` dir no reader or listing sees it."""
+    made: set[str] = set()
+    reported = {}
+    for f in files:
+        d = os.path.dirname(f.path)
+        if d not in made:
+            os.makedirs(os.path.join(snap_dir, d), exist_ok=True)
+            made.add(d)
+        dst = os.path.join(snap_dir, f.path)
+        os.rename(os.path.join(pending, f.path), dst)
+        reported[dst] = f.rows
+    shutil.rmtree(pending, ignore_errors=True)
+    return reported
+
+
+def _footer_rows(path: str) -> int | str:
+    try:
+        return pq.read_metadata(path).num_rows
+    except (OSError, pa.ArrowException):
+        return "unreadable footer"
+
+
+def _audit(
+    catalog: TableCatalog, table: str, snap: str, todo: set[int], reported: dict[str, int]
+) -> dict[str, tuple]:
+    """path → (footer rows, reported rows) for each data file, staged under
+    this run's bucket dirs or reported by its tasks, whose two counts
+    differ (None where it is absent): a missing, short or footerless file,
+    or one no task reported.  Equal files imply equal per-bucket sums.
+    Only footers are read, never data pages.  The buckets were uncommitted
+    and orphan-free, so every file in their dirs is this run's."""
+    staged = {
+        f: _footer_rows(f) for f in catalog.files(table, snap) if _bucket_of(f) in todo
+    }
+    return {
+        f: (staged.get(f), reported.get(f))
+        for f in sorted(staged.keys() | reported.keys())
+        if staged.get(f) != reported.get(f)
+    }
 
 
 def run_extraction(
@@ -153,11 +299,20 @@ def run_extraction(
     total_rows, total_failures}; when every wanted bucket has committed
     it returns them before planning anything.
 
-    Every staged footer is audited (``_footer_mismatches``) before
-    anything publishes.  Rows/bytes/failures per bucket come from
-    ``DataFrame.observe`` DURING the write and the audit reads footers
-    only — at 100 TB a read-back would be a second complete scan of the
-    output per run (r01 design flaw)."""
+    The run's one Spark job extracts and writes: its ``mapInArrow`` tasks
+    (``_write_buckets``) write Parquet files with pyarrow under the staged
+    snapshot's hidden ``_pending`` dir and report rows/bytes/failures and
+    their clocks per file.  The driver moves the reported files into their
+    bucket dirs (``_publish``), so a failed or speculative task attempt's
+    file is never published, and audits the staged snapshot against the
+    reports (``_audit``: file list and footers only) before anything
+    publishes; the output is never read back — at 100 TB a read-back would
+    be a second complete scan of the output per run (r01 design flaw).  A
+    bucket's ``started_at`` and ``finished_at`` are the first start and
+    last finish of the tasks that wrote it.  The codec is the session's
+    ``spark.sql.parquet.compression.codec``, checked before the job (a
+    codec pyarrow cannot write raises ``ValueError``); Spark's other
+    Parquet write settings do not reach these files."""
     committed, prior_rows, prior_failures = _read_lineage(catalog, lineage_table)
     orphans = _drop_orphan_buckets(catalog, output_table, committed)
     wanted = range(n_buckets) if only_buckets is None else only_buckets
@@ -174,50 +329,44 @@ def run_extraction(
         return summary
 
     src = with_conv_bucket(input_df, n_buckets).filter(F.col("conv_bucket").isin(todo))
-    started_at = datetime.now(timezone.utc)
-    extracted = extract_transcripts(src, num_partitions=num_partitions)
-    out = with_conv_bucket(extracted, n_buckets)
+    stage = stage_input(src, num_partitions, extra=("conv_bucket",))
+    codec = _pyarrow_codec(spark)
+    # a task holds at most one input batch's byte bound of unwritten output
+    budget = spark._jsparkSession.sessionState().conf().arrowMaxBytesPerBatch()
+    files: list = []
+    reported: dict[str, int] = {}
 
-    # per-bucket rows/bytes/failures ride the WRITE pass via observe():
-    # one conditional-aggregate triple per bucket still to do — all
-    # map-side, no extra job, no output re-scan
-    bytes_col = (
-        F.coalesce(F.octet_length("extracted_text"), F.lit(0))
-        + F.coalesce(F.octet_length("md"), F.lit(0))
-    ).cast("long")
-    fail_col = F.col("error").isNotNull().cast("long")
-    obs = Observation(f"lineage_{run_id}_{uuid.uuid4().hex[:8]}")
-    aggs = []
-    for b in todo:
-        in_b = (F.col("conv_bucket") == b).cast("long")
-        aggs.append(F.sum(in_b).alias(f"rows_{b}"))
-        aggs.append(F.sum(in_b * bytes_col).alias(f"bytes_{b}"))
-        aggs.append(F.sum(in_b * fail_col).alias(f"fails_{b}"))
-    out = out.observe(obs, *aggs)
+    def write(snap_dir: str) -> None:
+        pending = os.path.join(snap_dir, "_pending")
+        task = partial(_write_buckets, pending, codec, budget)
+        files.extend(stage.mapInArrow(task, _FILE_SCHEMA).collect())
+        reported.update(_publish(snap_dir, pending, files))
+
     # WRITE-audit-PUBLISH, for real: stage the data snapshot (invisible),
     # audit the staged files, stage the lineage rows, publish BOTH in one
     # atomic catalog commit — a kill anywhere leaves both or neither.
-    data_snap = catalog.stage_append(out, output_table, partition_by=["conv_bucket"])
-    vals = obs.get  # blocks until the staging write finishes
-    finished_at = datetime.now(timezone.utc)
-    rows = [
-        {"run_id": run_id, "partition_id": b, "conv_bucket": b,
-         "rows": vals[f"rows_{b}"], "bytes": vals[f"bytes_{b}"],
-         "failures": vals[f"fails_{b}"], "status": "committed",
-         "started_at": started_at, "finished_at": finished_at}
-        for b in todo
-        if vals[f"rows_{b}"]
-    ]
-    if not rows:
+    data_snap = catalog.stage_append(write, output_table)
+    if not files:
         catalog.discard_staged(data_snap)
         return summary
-    bad = _footer_mismatches(catalog, output_table, data_snap, rows)
+    bad = _audit(catalog, output_table, data_snap, set(todo), reported)
     if bad:
         catalog.discard_staged(data_snap)
         raise RuntimeError(
-            "write audit failed: staged footer rows != observed rows "
-            f"(bucket: (staged, observed)) {bad}; nothing published"
+            "write audit failed: staged files != reported files "
+            f"(path: (footer rows, reported rows)) {bad}; nothing published"
         )
+    by_bucket: dict[int, list] = {}
+    for f in files:
+        by_bucket.setdefault(f.conv_bucket, []).append(f)
+    rows = [
+        {"run_id": run_id, "partition_id": b, "conv_bucket": b,
+         "rows": sum(f.rows for f in fs), "bytes": sum(f.bytes for f in fs),
+         "failures": sum(f.failures for f in fs), "status": "committed",
+         "started_at": datetime.fromtimestamp(min(f.started for f in fs), timezone.utc),
+         "finished_at": datetime.fromtimestamp(max(f.finished for f in fs), timezone.utc)}
+        for b, fs in sorted(by_bucket.items())
+    ]
     lineage_snap = catalog.stage_append(
         pa.Table.from_pylist(rows, schema=_LINEAGE_ARROW), lineage_table
     )

@@ -21,6 +21,10 @@ Design points, per the north rule:
   main.py:203-209, so per-turn parallelism is semantics-preserving), and
   the shuffle key is ``(conv_id, salt(turn_idx))`` so one 10⁶-turn
   conversation spreads across up to ``N_SALTS`` tasks.
+* **One way to shape the stage's input**: ``stage_input`` (column select
+  plus the "auto" salted repartition) feeds both ``extract_transcripts``
+  and ``checkpoint.lineage.run_extraction``, whose stage runs
+  ``_extract_one`` and writes the rows to Parquet in the same task.
 * **Stable turn ordering** is restored only where an order-sensitive
   derivation needs it (W6): ``with_stable_order`` and
   ``assemble_conversations`` window/sort on ``(conv_id, turn_idx)``.
@@ -185,12 +189,18 @@ def _columnar(text: pa.Array, plain: pa.Array) -> list[pa.Array]:
     ]
 
 
-def extract_transcripts(
+_STAGE_COLUMNS = ("conv_id", "turn_idx", "role", "text", "tool", "ts")
+
+
+def stage_input(
     df: DataFrame,
     num_partitions: int | None = None,
     repartition: bool | str = "auto",
+    extra: tuple[str, ...] = (),
 ) -> DataFrame:
-    """transcripts(conv_id, turn_idx, role, text, tool, ts) → extraction table.
+    """The extraction stage's input: the six transcript columns (plus the
+    ``extra`` ones a stage function needs, e.g. ``run_extraction``'s
+    ``conv_bucket``), salted-repartitioned when ``repartition`` says so.
 
     ``repartition``:
       * ``"auto"`` (default) — shuffle via ``salted_repartition`` only when
@@ -202,16 +212,27 @@ def extract_transcripts(
         local bench).  A conv-grouped source (e.g. bucketed-by-conv_id
         table) arrives coarse → auto engages the salted shuffle.
       * ``True`` — always shuffle (explicitly skewed sources).
-      * ``False`` — never shuffle.
-
-    Null ``text``/``tool`` reach the dispatcher as None; ``role`` and ``ts``
-    pass through the Arrow stage unchanged."""
-    src = df.select("conv_id", "turn_idx", "role", "text", "tool", "ts")
+      * ``False`` — never shuffle."""
+    src = df.select(*_STAGE_COLUMNS, *extra)
     if repartition == "auto":
         target = src.sparkSession.sparkContext.defaultParallelism
         repartition = src.rdd.getNumPartitions() < target
     if repartition:
         src = salted_repartition(src, num_partitions)
+    return src
+
+
+def extract_transcripts(
+    df: DataFrame,
+    num_partitions: int | None = None,
+    repartition: bool | str = "auto",
+) -> DataFrame:
+    """transcripts(conv_id, turn_idx, role, text, tool, ts) → extraction table.
+
+    The input is shaped by ``stage_input`` (see there for ``repartition``).
+    Null ``text``/``tool`` reach the dispatcher as None; ``role`` and ``ts``
+    pass through the Arrow stage unchanged."""
+    src = stage_input(df, num_partitions, repartition)
     return src.mapInArrow(_extract_batches, EXTRACT_OUTPUT_SCHEMA)
 
 

@@ -37,6 +37,13 @@ Commit protocol (real snapshot isolation, not an approximation):
 files: readers such as checkpoint/lineage.py get file lists, never
 directories, as Iceberg readers get a manifest's.
 
+``stage_*`` take three kinds of input: a Spark DataFrame (written by
+Spark), a ``pyarrow.Table`` (rows already on the driver, written as one
+Parquet file) or a callable ``write(snap_dir)`` that writes the snapshot's
+new files itself — checkpoint/lineage.py passes one whose Spark stage
+writes Parquet with pyarrow from inside its tasks.  The carry-forward,
+``discard_staged`` and ``commit`` do not care which wrote the files.
+
 Concurrency — same-host MULTI-WRITER is supported: writers (processes
 or threads) serialize the pointer swap through an exclusive ``flock``
 on a persistent lockfile (kernel-released on crash, no staleness
@@ -64,7 +71,7 @@ import os
 import shutil
 import time
 import uuid
-from collections.abc import Collection, Iterator
+from collections.abc import Callable, Collection, Iterator
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -89,7 +96,8 @@ class TableCatalog:
         self.warehouse = warehouse
         os.makedirs(os.path.join(warehouse, _MANIFEST_DIR), exist_ok=True)
         # snapshot relpath → the snapshot it was staged ON TOP OF (None for
-        # a fresh table); commit() validates these bases under the lock
+        # a fresh table); commit() validates these bases under the lock and
+        # drops the entries it publishes, discard_staged the ones it deletes
         self._staged_bases: dict[str, str | None] = {}
 
     # -- manifest machinery ------------------------------------------------
@@ -187,7 +195,10 @@ class TableCatalog:
                     tables.pop(t, None)
                 else:
                     tables[t] = snap
-            return self._write_manifest(tables, parent)
+            name = self._write_manifest(tables, parent)
+            for snap in updates.values():  # published: no longer staged
+                self._staged_bases.pop(snap, None)
+            return name
         finally:
             self._release_commit_lock(lock_fd)
 
@@ -230,23 +241,30 @@ class TableCatalog:
     @staticmethod
     def _files(base: str, skip_snapshots: bool = False) -> Iterator[str]:
         """Relpaths of the data files under ``base``, lazily (``exists``
-        stops at the first): every file whose name does not start with
-        ``_`` or ``.`` (Spark's reader rule: no ``_SUCCESS`` or ``.crc``).
-        ``skip_snapshots`` prunes ``snap-*`` dirs (staged or historical
-        snapshots under a table root)."""
+        stops at the first): every file whose name and whose dirs' names
+        do not start with ``_`` or ``.`` (Spark's reader rule: no
+        ``_SUCCESS``, ``.crc`` or ``_temporary/``, nor a task's unpublished
+        files under a hidden dir).  ``skip_snapshots`` also prunes
+        ``snap-*`` dirs (staged or historical snapshots under a table
+        root)."""
+        hidden = ("_", ".", "snap-") if skip_snapshots else ("_", ".")
         for root, dirs, names in os.walk(base):
-            if skip_snapshots:
-                dirs[:] = [d for d in dirs if not d.startswith("snap-")]
+            dirs[:] = [d for d in dirs if not d.startswith(hidden)]
             sub = os.path.relpath(root, base)
             prefix = "" if sub == "." else sub + os.sep
             yield from (prefix + f for f in names if not f.startswith(("_", ".")))
+
+    @staticmethod
+    def _snapshot_rel(table: str, snapshot: str) -> str:
+        """``table/snap-…`` for a snapshot given in either form."""
+        return snapshot if "/" in snapshot else f"{table}/{snapshot}"
 
     def files(self, table: str, snapshot: str | None = None) -> list[str]:
         """Sorted absolute paths of the data files of ``table``'s current
         snapshot or of ``snapshot`` (staged or committed, ``snap-…`` or
         ``table/snap-…``); ``[]`` for a table never committed."""
         rel = self.current_tables().get(table) if snapshot is None else (
-            snapshot if "/" in snapshot else f"{table}/{snapshot}"
+            self._snapshot_rel(table, snapshot)
         )
         if rel is None:
             return []
@@ -266,8 +284,9 @@ class TableCatalog:
         snapshot: str | None = None,
         merge_schema: bool = False,
     ) -> DataFrame:
-        """Read the current snapshot — or, with ``snapshot="snap-…"``, a
-        superseded one that has not been expired (time travel).
+        """Read the current snapshot — or, with ``snapshot`` (``snap-…`` or
+        ``table/snap-…``), a superseded one that has not been expired
+        (time travel).
 
         ``merge_schema=True`` serves Iceberg-style ADD-COLUMN evolution: a
         snapshot whose appends introduced new columns carries files of
@@ -281,41 +300,47 @@ class TableCatalog:
         if merge_schema:
             reader = reader.option("mergeSchema", "true")
         if snapshot is not None:
-            return reader.parquet(os.path.join(self.path(table), snapshot))
+            rel = self._snapshot_rel(table, snapshot)
+            return reader.parquet(os.path.join(self.warehouse, rel))
         dp = self.data_path(table)
         return reader.parquet(dp if dp else self.path(table))
 
     # -- staged writes -----------------------------------------------------
     def stage_overwrite(
         self,
-        df: DataFrame | pa.Table,
+        df: DataFrame | pa.Table | Callable[[str], object],
         table: str,
         partition_by: list[str] | None = None,
     ) -> str:
         """Write ``df`` into a NEW unreferenced snapshot dir; returns the
         snapshot relpath for ``commit``.  Invisible to readers until
         committed.  A ``pyarrow.Table`` (rows already in driver memory,
-        e.g. lineage) is written as one Parquet file, without Spark."""
+        e.g. lineage) is written as one Parquet file, without Spark; a
+        callable is called once with the new (existing, empty) snapshot
+        dir and writes the files, partition dirs included, itself."""
         snap = f"snap-{uuid.uuid4().hex}"
         base = self.current_tables().get(table)
         snap_dir = os.path.join(self.path(table), snap)
-        if isinstance(df, pa.Table):
-            if partition_by:
-                raise ValueError("partition_by needs a Spark DataFrame")
-            os.makedirs(snap_dir)
-            pq.write_table(df, os.path.join(snap_dir, f"part-{uuid.uuid4()}.parquet"))
-        else:
+        if isinstance(df, DataFrame):
             w = df.write.mode("overwrite")
             if partition_by:
                 w = w.partitionBy(*partition_by)
             w.parquet(snap_dir)
+        else:
+            if partition_by:
+                raise ValueError("partition_by needs a Spark DataFrame")
+            os.makedirs(snap_dir)
+            if isinstance(df, pa.Table):
+                pq.write_table(df, os.path.join(snap_dir, f"part-{uuid.uuid4()}.parquet"))
+            else:
+                df(snap_dir)
         rel = f"{table}/{snap}"
         self._staged_bases[rel] = base
         return rel
 
     def stage_append(
         self,
-        df: DataFrame | pa.Table,
+        df: DataFrame | pa.Table | Callable[[str], object],
         table: str,
         partition_by: list[str] | None = None,
     ) -> str:
@@ -587,11 +612,7 @@ class TableCatalog:
         cur = self.current_tables().get(table)
         if cur is None:
             raise KeyError(f"no committed table {table!r}")
-        since = (
-            since_snapshot
-            if "/" in since_snapshot
-            else f"{table}/{since_snapshot}"
-        )
+        since = self._snapshot_rel(table, since_snapshot)
 
         def data_files(rel: str) -> set[str]:
             base = os.path.join(self.warehouse, rel)
@@ -760,22 +781,12 @@ class TableCatalog:
         in it.
 
         Returns key columns (or all columns when keyless) + ``status``.
-        Snapshot ids are accepted in either form — bare ``snap-…`` (the
-        `read` convention) or the ``table/snap-…`` relpath
-        `current_tables()` returns.
+        Snapshot ids are accepted in either form `read` takes — bare
+        ``snap-…`` or the ``table/snap-…`` relpath `current_tables()`
+        returns.
         """
-
-        def _snap(s: str) -> str:
-            return s.rsplit("/", 1)[-1]
-
-        b = self.read(table, snapshot=_snap(base_snapshot), merge_schema=True)
-        t = (
-            self.read(
-                table, snapshot=_snap(target_snapshot), merge_schema=True
-            )
-            if target_snapshot is not None
-            else self.read(table, merge_schema=True)
-        )
+        b = self.read(table, snapshot=base_snapshot, merge_schema=True)
+        t = self.read(table, snapshot=target_snapshot, merge_schema=True)
         # union schema: target's column order, then base-only columns
         cols = t.columns + [c for c in b.columns if c not in t.columns]
         types = {f.name: f.dataType for f in (*b.schema, *t.schema)}

@@ -105,11 +105,11 @@ def test_orphan_bucket_dropped_before_resume(spark, tmp_path, input_df):
 
 
 def test_metrics_do_not_rescan_output(spark, tmp_path, input_df):
-    """Lineage rows/bytes/failures come from observe() during the write —
-    the output table must never be READ (r01 re-scanned the whole output
-    per run; at 100 TB that is a second full pass).  The write audit reads
-    only the staged Parquet footers, with pyarrow.  Metrics must still be
-    faithful."""
+    """Lineage rows/bytes/failures come from the tasks that write the
+    staged files, as they write them — the output table must never be
+    READ (r01 re-scanned the whole output per run; at 100 TB that is a
+    second full pass).  The write audit reads only the staged Parquet
+    footers, with pyarrow.  Metrics must still be faithful."""
     cat = TableCatalog(spark, str(tmp_path / "wh_e"))
     reads = []
     orig_read = cat.read
@@ -283,6 +283,190 @@ def test_pyarrow_lineage_appends_to_spark_written_lineage(spark, tmp_path, input
     times = [t for r in rows for t in (r.started_at, r.finished_at)]
     assert None not in times and max(times) - min(times) < timedelta(minutes=10)
     assert sum(r.rows for r in rows) == s["total_rows"] == cat.read("extracted").count()
+
+
+class _ExtraFileCatalog(TableCatalog):
+    """Plants a ``part-*.parquet`` in a bucket dir this run wrote, after the
+    write and before the audit: a zero-row file (its footer adds no rows,
+    so a per-bucket row count cannot see it) or one with no footer at all
+    (what a writer killed mid-file leaves)."""
+
+    def __init__(self, spark, warehouse, footer):
+        super().__init__(spark, warehouse)
+        self.footer = footer
+
+    def stage_append(self, df, table, partition_by=None):
+        rel = super().stage_append(df, table, partition_by)
+        if table == "extracted":
+            self.planted = max(self.files(table, rel))
+            stray = os.path.join(os.path.dirname(self.planted), "part-00000-1-stray.parquet")
+            if self.footer:
+                pq.write_table(pq.read_schema(self.planted).empty_table(), stray)
+            else:
+                with open(stray, "wb") as f:
+                    f.write(b"PAR1 cut off before its footer")
+        return rel
+
+
+@pytest.mark.parametrize("footer", [True, False], ids=["zero_rows", "no_footer"])
+def test_write_audit_rejects_unreported_file(spark, tmp_path, input_df, footer):
+    wh = str(tmp_path / "wh_stray")
+    cat = TableCatalog(spark, wh)
+    first_half = set(range(N_BUCKETS // 2))
+    run_extraction(
+        spark, cat, input_df, run_id="r1", n_buckets=N_BUCKETS, only_buckets=first_half
+    )
+    head = open(os.path.join(wh, "_HEAD")).read()
+    tables = cat.current_tables()
+
+    stray = _ExtraFileCatalog(spark, wh, footer)
+    with pytest.raises(RuntimeError, match="write audit failed.*part-00000-1-stray"):
+        run_extraction(spark, stray, input_df, run_id="r2", n_buckets=N_BUCKETS)
+    # the stray file sat in a bucket of this run, not a committed one
+    assert int(stray.planted.split("conv_bucket=")[1].split("/")[0]) not in first_half
+    assert open(os.path.join(wh, "_HEAD")).read() == head
+    assert cat.current_tables() == tables
+    assert committed_buckets(cat, "run_partitions") == first_half
+    assert not [d for d in os.listdir(os.path.join(wh, "extracted"))
+                if os.path.join("extracted", d) not in tables.values()]
+
+
+class _ZombieAttemptCatalog(TableCatalog):
+    """Plants what task attempts Spark did not keep leave under the staged
+    snapshot's ``_pending`` dir: a footerless file of an attempt that died
+    before the write finished, and one a killed speculative attempt opens
+    after the driver moved the reported files."""
+
+    def stage_overwrite(self, df, table, partition_by=None):
+        if table != "extracted":
+            return super().stage_overwrite(df, table, partition_by)
+
+        def write(snap_dir):
+            self.zombies = [self._plant(snap_dir, "dead")]
+            df(snap_dir)
+            self.zombies.append(self._plant(snap_dir, "late"))
+
+        return super().stage_overwrite(write, table, partition_by)
+
+    @staticmethod
+    def _plant(snap_dir, tag):
+        d = os.path.join(snap_dir, "_pending", "conv_bucket=0")
+        os.makedirs(d, exist_ok=True)
+        path = os.path.join(d, f"part-00000-9-{tag}.parquet")
+        with open(path, "wb") as f:
+            f.write(b"PAR1 cut off before its footer")
+        return path
+
+
+def test_unreported_attempt_files_stay_hidden(spark, tmp_path, input_df):
+    """Only the files of the task attempts Spark kept are published: files
+    other attempts leave in ``_pending`` neither fail the run nor reach a
+    reader."""
+    ref = TableCatalog(spark, str(tmp_path / "wh_zref"))
+    run_extraction(spark, ref, input_df, run_id="ref", n_buckets=N_BUCKETS)
+    cat = _ZombieAttemptCatalog(spark, str(tmp_path / "wh_zombie"))
+    s = run_extraction(spark, cat, input_df, run_id="r1", n_buckets=N_BUCKETS)
+    assert s["processed_buckets"] == N_BUCKETS
+    assert os.path.exists(cat.zombies[1])  # written after the move, on disk
+    assert not any("part-00000-9-" in f for f in cat.files("extracted"))
+    assert _sorted_rows(cat.read("extracted")) == _sorted_rows(ref.read("extracted"))
+
+
+def _all_rows(df):
+    return [tuple(r) for r in df.select(*sorted(df.columns)).orderBy("conv_id", "turn_idx").collect()]
+
+
+def test_resume_onto_spark_written_output(spark, tmp_path, input_df):
+    """Existing warehouses hold Spark-written output (INT96 ``ts``);
+    run_extraction now appends pyarrow-written files (INT64 ``ts``,
+    UTC-adjusted).  The mixed table must read with one schema, equal a
+    clean one-shot run in every column, and keep the input's ``ts``."""
+    ref = TableCatalog(spark, str(tmp_path / "wh_ref"))
+    run_extraction(spark, ref, input_df, run_id="ref", n_buckets=N_BUCKETS)
+
+    cat = TableCatalog(spark, str(tmp_path / "wh_mixed_out"))
+    first_half = set(range(N_BUCKETS // 2))
+    run_extraction(
+        spark, cat, input_df, run_id="r1", n_buckets=N_BUCKETS, only_buckets=first_half
+    )
+    # rewrite the output through Spark, as every pre-existing warehouse has it
+    cat.overwrite(cat.read("extracted"), "extracted", partition_by=["conv_bucket"])
+    old_files = cat.files("extracted")
+    ts_type = pq.ParquetFile(old_files[0]).schema.column(3)
+    assert ts_type.name == "ts" and ts_type.physical_type == "INT96"
+
+    s = run_extraction(spark, cat, input_df, run_id="r2", n_buckets=N_BUCKETS)
+    assert s["processed_buckets"] == N_BUCKETS - len(first_half)
+    resumed = [
+        f for f in cat.files("extracted")
+        if int(f.split("conv_bucket=")[1].split("/")[0]) not in first_half
+    ]
+    assert resumed
+    for f in resumed:
+        assert pq.ParquetFile(f).schema.column(3).physical_type == "INT64"
+
+    got, want = cat.read("extracted"), ref.read("extracted")
+    assert got.schema == want.schema
+    assert _all_rows(got) == _all_rows(want)
+    ts_in = {(r.conv_id, r.turn_idx): r.ts for r in input_df.collect()}
+    ts_out = {(r.conv_id, r.turn_idx): r.ts for r in got.collect()}
+    assert ts_out == ts_in and any(t is not None for t in ts_in.values())
+
+
+def test_staged_files_use_session_codec(spark, tmp_path, input_df):
+    """pyarrow writes the staged files with the codec the session names in
+    ``spark.sql.parquet.compression.codec`` (not pyarrow's snappy)."""
+    key = "spark.sql.parquet.compression.codec"
+    session_codec = spark.conf.get(key)
+    try:
+        for i, codec in enumerate((session_codec, "gzip")):
+            spark.conf.set(key, codec)
+            cat = TableCatalog(spark, str(tmp_path / f"wh_codec{i}"))
+            run_extraction(spark, cat, input_df, run_id="r1", n_buckets=N_BUCKETS)
+            used = {
+                pq.read_metadata(f).row_group(0).column(c).compression.lower()
+                for f in cat.files("extracted")
+                for c in range(pq.read_metadata(f).num_columns)
+            }
+            assert used == {codec}
+        # a codec pyarrow cannot write fails on the driver, before any job
+        spark.conf.set(key, "lzo")
+        cat = TableCatalog(spark, str(tmp_path / "wh_lzo"))
+        with pytest.raises(ValueError, match="lzo"):
+            run_extraction(spark, cat, input_df, run_id="r1", n_buckets=N_BUCKETS)
+        assert cat.current_tables() == {} and not os.path.exists(cat.path("extracted"))
+    finally:
+        spark.conf.set(key, session_codec)
+    assert session_codec != "snappy"
+
+
+def test_lineage_times_are_per_bucket(spark, tmp_path, input_df):
+    """Each bucket's ``started_at``/``finished_at`` are the first start and
+    last finish of the tasks that wrote it, inside the run's wall clock.
+    With the input hash-partitioned on the bucket, each task writes its own
+    buckets: buckets share an interval exactly when one task wrote them."""
+    from datetime import datetime, timezone
+
+    parted = with_conv_bucket(input_df, N_BUCKETS).repartition(4, "conv_bucket")
+    task_of = dict(
+        parted.rdd.mapPartitionsWithIndex(
+            lambda i, rows: {(r.conv_bucket, i) for r in rows}
+        ).collect()
+    )
+    assert len(task_of) == N_BUCKETS and len(set(task_of.values())) > 1
+
+    cat = TableCatalog(spark, str(tmp_path / "wh_times"))
+    t0 = datetime.now(timezone.utc)
+    run_extraction(spark, cat, parted, run_id="r1", n_buckets=N_BUCKETS)
+    t1 = datetime.now(timezone.utc)
+    lineage = pq.read_table(cat.files("run_partitions")).to_pylist()
+    assert len(lineage) == N_BUCKETS
+    for r in lineage:
+        assert t0 <= r["started_at"] <= r["finished_at"] <= t1, r
+    interval = {r["conv_bucket"]: (r["started_at"], r["finished_at"]) for r in lineage}
+    for a in interval:
+        for b in interval:
+            assert (interval[a] == interval[b]) == (task_of[a] == task_of[b]), (a, b)
 
 
 def test_single_commit_kill_shows_both_or_neither(spark, tmp_path, input_df):
@@ -971,3 +1155,27 @@ def test_stage_append_name_collision_discards_staged(spark, tmp_path):
     assert not os.path.exists(os.path.join(wh, rel))
     assert rel not in cat._staged_bases
     assert sorted(r.id for r in cat.read("t").collect()) == [1, 2]
+
+
+def test_commit_forgets_published_staged_bases(spark, tmp_path):
+    """``commit`` drops the bases of the snapshots it publishes, so a
+    long-lived catalog does not grow by one entry per commit."""
+    import pyarrow as pa
+
+    cat = TableCatalog(spark, str(tmp_path / "wh_bases"))
+    for i in range(5):
+        cat.commit({"t": cat.stage_append(pa.table({"id": [i]}), "t")})
+    assert len(cat._staged_bases) == 0
+    assert sorted(r.id for r in cat.read("t").collect()) == list(range(5))
+
+
+def test_read_snapshot_takes_both_forms(spark, tmp_path):
+    """``read(table, snapshot=…)`` takes the ``table/snap-…`` relpath the
+    catalog returns as well as the bare ``snap-…``."""
+    cat = TableCatalog(spark, str(tmp_path / "wh_read_forms"))
+    cat.append(spark.createDataFrame([(1,), (2,)], "id long"), "t")
+    rel = cat.current_tables()["t"]
+    cat.append(spark.createDataFrame([(3,)], "id long"), "t")
+    by_rel = sorted(r.id for r in cat.read("t", snapshot=rel).collect())
+    by_name = sorted(r.id for r in cat.read("t", snapshot=rel.split("/", 1)[1]).collect())
+    assert by_rel == by_name == [1, 2]
