@@ -8,7 +8,7 @@ Spark DataFrame engine:
   boilerplate strip, PDF layout analysis, markdown assembly).  These are
   the single code path shared by the Spark UDFs and the golden oracle,
   so byte-equality between engine and oracle is by construction.
-* ``plans/``       — the Spark jobs (salted repartition → mapInArrow →
+* ``plans/``       — the Spark jobs (per-turn repartition → mapInArrow →
   ordering window → sink) that run the extractors at scale.
 * ``operators/``   — relational/dataflow operators from SURVEY.md §2
   (ordered group-merge, first-non-empty coalesce, stable list dedup,

@@ -66,6 +66,11 @@ def _record(
     }
 
 
+# json's C scanner recurses once per nesting level: a payload nested deeper
+# than the interpreter's recursion limit raises RecursionError, valid or not
+_BAD_JSON = (ValueError, RecursionError)
+
+
 def _repair_tool_payload(raw: str) -> Any | None:
     """S3 payload repair — the structural-rebuild analog of the reference's
     two-pass PDF repair (utils/utils.py:27-50: pypdf page-by-page rebuild,
@@ -82,7 +87,7 @@ def _repair_tool_payload(raw: str) -> Any | None:
     try:  # pass 1: valid prefix + trailing garbage
         obj, _end = json.JSONDecoder().raw_decode(s)
         return obj
-    except ValueError:
+    except _BAD_JSON:
         pass
     # pass 2: close what truncation left open
     stack: list[str] = []
@@ -113,7 +118,7 @@ def _repair_tool_payload(raw: str) -> Any | None:
     fixed += "".join(reversed(stack))
     try:
         return json.loads(fixed)
-    except ValueError:
+    except _BAD_JSON:
         return None
 
 
@@ -122,7 +127,7 @@ def extract_turn(text: str | None, tool: str | None) -> dict[str, Any]:
     if tool is not None and tool.strip():
         try:
             payload = json.loads(tool)
-        except (json.JSONDecodeError, ValueError) as e:
+        except _BAD_JSON as e:
             payload = _repair_tool_payload(tool)
             if payload is None:
                 return _record(

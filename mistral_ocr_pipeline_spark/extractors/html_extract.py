@@ -229,39 +229,29 @@ def _classify(c: _Candidate) -> Block | None:
 # ---------------------------------------------------------------------------
 # The stdlib html.parser spends most of its time in per-tag Python
 # bookkeeping (goahead/parse_starttag/updatepos — 65% of the whole
-# extraction kernel under cProfile).  This scanner produces the identical
-# event stream for the HTML this extractor understands — tag names
-# lowercased, charrefs decoded in data AND attribute values, script/style
-# treated as raw text (the stdlib's CDATA_CONTENT_ELEMENTS), self-closing
-# tags emitting start+end — and feeds the same _BlockParser callbacks, so
-# block semantics cannot drift between the two paths.  Parity is pinned by
-# a hypothesis property test (test_property_extractors.py) and the golden
-# suite; `tokenizer="stdlib"` keeps the reference path selectable.
+# extraction kernel under cProfile).  The scanner decides on its own only
+# what one _TOKEN_RE match settles: text (charrefs decoded), end tags of
+# html.parser's well-formed ``endtagfind`` shape, and STRICT start tags
+# (tag name lowercased, self-closing tags emitting start+end).  Every other
+# '<' — comments, doctypes, PIs, CDATA sections, tolerant start and end
+# tags, unterminated constructs, a stray '<' — and the raw text of script/
+# style go to html.parser's own methods on the same _BlockParser, so the
+# fast path cannot drift from the ``tokenizer="stdlib"`` reference there.
+# Parity is pinned by a hypothesis property test (test_property_extractors
+# .py) and the golden suite.
 
 _TOKEN_RE = re.compile(
     r"""
-      <!--.*?(?:-->|$)                          # comment (possibly unclosed)
-    | <!\[CDATA\[.*?(?:\]\]>|$)                 # CDATA
-    | <![^>]*>?                                 # doctype / bogus declaration
-    | <\?[^>]*>?                                # processing instruction
-    | </\s*([a-zA-Z][^\t\n\r\f\x20/>\x00]*)[^>]*>  # end tag   -> group 1
-                                                #   (name charset matches
-                                                #   html.parser's tolerant
-                                                #   tagfind: '</p">' ends p")
-    | </[^>]*(?:>|$)                            # bogus end tag (</ + non-letter):
-                                                #   html.parser consumes it as a
-                                                #   bogus comment through the '>'
-    | <([a-zA-Z][-a-zA-Z0-9_:.]*)               # STRICT start tag -> group 2
+      </\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>        # end tag          -> group 1
+    | <([a-zA-Z][-a-zA-Z0-9_:.]*)(?=[\t\n\r\f />])  # STRICT start tag -> group 2
         ((?:\s+[a-zA-Z_:][-a-zA-Z0-9_:.]*       #   attr name
             (?:=(?:"[^"<>]*"                    #   ="..." value
                 |'[^'<>]*'                      #   ='...' value
                 |[-a-zA-Z0-9_./:;,+#%?&~]*      #   =bare value (no quotes)
             ))?
-         )*\s*/?)>                              #   attr blob  -> group 3
-    | (<)(?=[a-zA-Z])                           # tolerant start-tag opener
-                                                #   -> group 4: slow path
-    | ([^<]+)                                   # text         -> group 5
-    | <                                         # stray '<' as text
+         )*)\s*(/?)>                            #   attrs -> 3, '/' -> 4
+    | ([^<]+)                                   # text             -> group 5
+    | <                                         # other markup: html.parser
     """,
     re.DOTALL | re.VERBOSE,
 )
@@ -271,33 +261,23 @@ _TOKEN_RE = re.compile(
 # exponential backtracking on an unclosed quoted tag: time doubled per
 # added quote) — and (b) provably equivalent to html.parser on the inputs
 # it accepts: every char class is a subset of the stdlib tolerant charsets
-# (tagfind_tolerant / attrfind_tolerant), each attr is space-preceded (so
-# the stdlib lookbehind ``(?<=['"\s/])`` holds) and single-'=' (so
-# ``=+`` consumes identically), so locatestarttagend_tolerant consumes
-# exactly the same span and ends on the same '>'.  Anything else —
-# unclosed quotes, '>' inside quoted values, '='-less junk, bogus
-# constructs — falls through to the tolerant opener, handled by
-# ``_parse_starttag_tolerant`` which mirrors html.parser's
-# parse_starttag/check_for_whole_start_tag byte for byte.
+# (tagfind_tolerant / attrfind_tolerant), the tag name ends where the
+# stdlib's does (the lookahead admits only its terminators: ASCII
+# whitespace other than \v, '/' and '>'), each attr is space-preceded (so
+# the stdlib lookbehind ``(?<=['"\s/])`` holds) and single-'=' (so ``=+``
+# consumes identically), so locatestarttagend_tolerant consumes exactly the
+# same span and ends on the same '>'.  The '/' of group 4 self-closes as in
+# html.parser: a bare value takes a trailing '/' (<img alt=plain/> gives
+# alt='plain/'), which leaves group 4 empty.  The end-tag alternative is
+# the stdlib's own ``endtagfind``.  Anything else — unclosed quotes, '>'
+# inside quoted values, '='-less junk, bogus constructs — is left to
+# ``_markup``.
 
 _ATTR_RE = re.compile(
     r"""([a-zA-Z][a-zA-Z0-9:._-]*)\s*(?:=\s*("([^"]*)"|'([^']*)'|[^\s>]*))?""",
     re.VERBOSE,
 )
 
-# stdlib tolerant start-tag machinery, reused directly so the slow path is
-# the same regex the ``tokenizer="stdlib"`` parity reference runs (these
-# module globals are stable across CPython 3.9–3.13)
-from html.parser import (  # noqa: E402
-    attrfind_tolerant as _attrfind,
-    locatestarttagend_tolerant as _locatestarttagend,
-    tagfind_tolerant as _tagfind,
-)
-
-_RAWTEXT_END = {
-    "script": re.compile(r"(?is)</script(?:\s[^>]*)?>"),
-    "style": re.compile(r"(?is)</style(?:\s[^>]*)?>"),
-}
 
 def _unescape(s: str) -> str:
     if "&" in s:  # plain `in` beats a regex probe on the no-charref fast path
@@ -322,169 +302,84 @@ def _parse_attrs(blob: str) -> list[tuple[str, str | None]]:
     return attrs
 
 
-def _is_terminated(g: str) -> bool:
-    """Whether a <!…> / <?…> construct matched by _TOKEN_RE actually closed
-    (the terminator must not overlap the opener, mirroring html.parser's
-    find-from-offset behavior for '<!-->' and friends)."""
-    if g.startswith("<!--"):
-        return g.endswith("-->") and len(g) >= 7
-    if g.startswith("<![CDATA["):
-        return g.endswith("]]>") and len(g) >= 12
-    return g.endswith(">")
-
-
 def _drive_fast(p: _BlockParser, html_text: str) -> None:
     # branch dispatch on m.lastindex (highest group that matched) instead of
-    # extracting all five groups per token: the alternation's matched branch
-    # is known from one int — 5=text, 3=strict start tag (group 3 always
-    # participates, even empty), 1=end tag, 4=tolerant opener, None=
-    # comment/doctype/PI/CDATA/bogus-end/stray '<'.  Ordered by frequency;
-    # measured ~15% off the whole tokenize loop on fixture docs.
+    # extracting all groups per token: the alternation's matched branch is
+    # known from one int — 5=text, 4=strict start tag (group 4 always
+    # participates, even empty), 1=end tag, None=other markup.  Ordered by
+    # frequency; measured ~15% off the whole tokenize loop on fixture docs.
+    p.rawdata = html_text  # what html.parser's parse_* methods read
     pos, n = 0, len(html_text)
     while pos < n:
         m = _TOKEN_RE.match(html_text, pos)
-        if m is None:  # cannot happen (last alternations are catch-alls)
+        if m is None:  # cannot happen (the last alternation is a catch-all)
             break
         start, pos = pos, m.end()  # match is anchored: m.start() == pos
         li = m.lastindex
         if li == 5:  # text
             p.handle_data(_unescape(m.group(5)))
             continue
-        if li == 3:  # strict start tag
-            start_tag, attr_blob = m.group(2, 3)
-            tag = start_tag.lower()
-            # html.parser subtlety: a trailing '/' right after an UNQUOTED
-            # attribute value is part of the value (<img alt=plain/> gives
-            # alt='plain/', not a self-closing tag); '/' only self-closes
-            # when preceded by whitespace, a quote, or the tag name itself
-            selfclosing = attr_blob.endswith("/") and (
-                len(attr_blob) == 1 or attr_blob[-2] in " \t\n\r\f\"'"
-            )
+        if li == 4:  # strict start tag
+            tag = m.group(2).lower()
             # img is the only tag whose attributes the consumer reads
-            blob = attr_blob[:-1] if selfclosing else attr_blob
-            attrs = _parse_attrs(blob) if tag == "img" else []
+            attrs = _parse_attrs(m.group(3)) if tag == "img" else []
             p.handle_starttag(tag, attrs)
-            if selfclosing:
+            if m.group(4):
                 p.handle_endtag(tag)
-            elif tag in _RAWTEXT_END:
-                pos = _rawtext_skip(p, html_text, pos, tag)
-            continue
-        if li == 1:  # end tag
+            elif tag in p.CDATA_CONTENT_ELEMENTS:
+                p.set_cdata_mode(tag)
+        elif li == 1:  # end tag
             p.handle_endtag(m.group(1).lower())
             continue
-        if li == 4:
-            # start tag the STRICT alternative rejected: mirror html.parser's
-            # parse_starttag exactly (tolerant regexes + junk/EOF recovery)
-            pos = _parse_starttag_tolerant(p, html_text, start)
-            continue
-        # li is None: comment / doctype / PI / CDATA / bogus end tag / '<'
-        g0 = m.group(0)
-        if g0 == "<":
-            p.handle_data("<")
-        elif g0.startswith("</") and not g0.endswith(">"):
-            # unterminated bogus end tag at EOF: same recovery as below but
-            # html.parser scans for the next '<' only
-            k = html_text.find("<", start + 1)
-            k = k if k >= 0 else start + 1
-            p.handle_data(_unescape(html_text[start:k]))
-            pos = k
-        elif g0.startswith(("<!", "<?")) and not _is_terminated(g0):
-            # unterminated comment/CDATA/declaration/PI: html.parser's
-            # bogus-construct recovery emits raw data up to and including
-            # the FIRST '>' (else up to the next '<', else one char), then
-            # resumes tokenizing there — replicate exactly
-            k = html_text.find(">", start + 1)
-            if k < 0:
-                k = html_text.find("<", start + 1)
-                k = k if k >= 0 else start + 1
-            else:
-                k += 1
-            p.handle_data(_unescape(html_text[start:k]))
-            pos = k
-        # else: closed comment / doctype / PI / CDATA / closed bogus end
-        # tag — no consumer, dropped
+        else:  # other markup (it may open script/style too)
+            pos = _markup(p, start)
+        if p.cdata_elem is not None:
+            pos = _raw_text(p, pos)
 
 
-def _rawtext_skip(p: _BlockParser, html_text: str, pos: int, tag: str) -> int:
-    """Skip a raw-text element (script/style) to its end tag without
-    tokenizing; returns the resume position."""
-    end = _RAWTEXT_END[tag].search(html_text, pos)
-    if end is None:
-        p.handle_data(html_text[pos:])
-        return len(html_text)
-    p.handle_data(html_text[pos : end.start()])
-    p.handle_endtag(tag)
-    return end.end()
-
-
-_ASCII_LETTERS_EQ_SLASH = frozenset(
-    "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ=/"
-)
-
-
-def _parse_starttag_tolerant(p: _BlockParser, html_text: str, i: int) -> int:
-    """Byte-faithful mirror of html.parser's parse_starttag +
-    check_for_whole_start_tag + goahead's incomplete-tag recovery (CPython
-    Lib/html/parser.py), driven against the same stdlib tolerant regexes so
-    the fast tokenizer cannot drift from the ``tokenizer="stdlib"`` parity
-    reference on malformed start tags.  Returns the resume position."""
-    m = _locatestarttagend.match(html_text, i)
-    j = m.end()
-    nxt = html_text[j : j + 1]
-    if nxt == ">":
-        endpos = j + 1
-    elif nxt == "/" and html_text.startswith("/>", j):
-        endpos = j + 2
-    elif nxt == "" or nxt == "/" or nxt in _ASCII_LETTERS_EQ_SLASH:
-        # end of input inside the tag (html.parser would wait for more
-        # data; at close() its goahead(end=1) recovery emits raw data up
-        # to and including the first '>', else to the next '<', else one
-        # char — identical to the bogus-declaration recovery)
-        k = html_text.find(">", i + 1)
+def _markup(p: _BlockParser, i: int) -> int:
+    """html.parser's handling of the '<' at ``i``: ``goahead``'s dispatch
+    to its ``parse_*`` methods, then, where one returns -1 (the construct
+    never closes), goahead's end-of-input recovery, which emits the raw
+    text up to and including the next '>' (else to the next '<', else one
+    char) as data.  Returns the resume position."""
+    rawdata = p.rawdata
+    c = rawdata[i + 1 : i + 2]
+    if c.isascii() and c.isalpha():
+        k = p.parse_starttag(i)
+    elif c == "/":
+        k = p.parse_endtag(i)
+    elif rawdata.startswith("<!--", i):
+        k = p.parse_comment(i)
+    elif c == "?":
+        k = p.parse_pi(i)
+    elif c == "!":
+        k = p.parse_html_declaration(i)
+    else:  # a '<' that opens nothing, the last char included, is data
+        p.handle_data("<")
+        return i + 1
+    if k < 0:
+        k = rawdata.find(">", i + 1)
         if k < 0:
-            k = html_text.find("<", i + 1)
+            k = rawdata.find("<", i + 1)
             k = k if k >= 0 else i + 1
         else:
             k += 1
-        p.handle_data(_unescape(html_text[i:k]))
-        return k
-    else:
-        endpos = j if j > i else i + 1
-    # parse_starttag proper: tag name, then the attr loop
-    mt = _tagfind.match(html_text, i + 1)
-    k = mt.end()
-    tag = mt.group(1).lower()
-    attrs: list[tuple[str, str | None]] = []
-    want_attrs = tag == "img"  # only consumer that reads attributes
-    while k < endpos:
-        ma = _attrfind.match(html_text, k)
-        if not ma:
-            break
-        if want_attrs:
-            attrname, rest, attrvalue = ma.group(1, 2, 3)
-            if not rest:
-                attrvalue = None
-            elif (
-                attrvalue[:1] == "'" == attrvalue[-1:]
-                or attrvalue[:1] == '"' == attrvalue[-1:]
-            ):
-                attrvalue = attrvalue[1:-1]
-            if attrvalue:
-                attrvalue = _unescape(attrvalue)
-            attrs.append((attrname.lower(), attrvalue))
-        k = ma.end()
-    end = html_text[k:endpos].strip()
-    if end not in (">", "/>"):
-        # junk between the last attr and the '>': html.parser emits the
-        # whole tag text as data, WITHOUT charref conversion
-        p.handle_data(html_text[i:endpos])
-        return endpos
-    p.handle_starttag(tag, attrs)
-    if end == "/>":
-        p.handle_endtag(tag)
-    elif tag in _RAWTEXT_END:
-        return _rawtext_skip(p, html_text, endpos, tag)
-    return endpos
+        p.handle_data(_unescape(rawdata[i:k]))
+    return k
+
+
+def _raw_text(p: _BlockParser, pos: int) -> int:
+    """html.parser's CDATA mode for the open script/style element: its
+    content up to the matching end tag is data, and ``parse_endtag`` closes
+    the element and the mode.  Without an end tag the rest of the document
+    is the element's content, which no block keeps (``_SKIP_TAGS``).
+    Returns the resume position."""
+    end = p.interesting.search(p.rawdata, pos)
+    if end is None:
+        return len(p.rawdata)
+    p.handle_data(p.rawdata[pos : end.start()])
+    return p.parse_endtag(end.start())
 
 
 def extract_html_blocks(html_text: str, tokenizer: str = "fast") -> list[Block]:

@@ -11,7 +11,7 @@ empty/null/whitespace text, unicode (NFD pairs, emoji, CJK, RTL), duplicate
 content across adjacent turns, text+tool both set, malformed payloads.
 
 Skew profiles (FIXTURES.md §1): ``skew`` gives one conversation ~50% of all
-turns (Zipf head) to exercise conv_id-salted repartitioning.
+turns (Zipf head) to exercise the per-turn repartitioning.
 """
 
 from __future__ import annotations
@@ -179,7 +179,7 @@ def gen_transcripts(
     """Deterministic rows (conv_id, turn_idx, role, text, tool, ts).
 
     ``profile='skew'`` gives conv 0 half of all turns (Zipf head) for
-    salting validation; ``'unit'`` sprinkles edge rows every 7th turn."""
+    skew validation; ``'unit'`` sprinkles edge rows every 7th turn."""
     rng = random.Random(seed)
     rows = []
     edge_counter = 0

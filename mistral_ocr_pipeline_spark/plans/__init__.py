@@ -2,6 +2,5 @@ from mistral_ocr_pipeline_spark.plans.extract_pipeline import (  # noqa: F401
     EXTRACT_OUTPUT_SCHEMA,
     assemble_conversations,
     extract_transcripts,
-    salted_repartition,
     with_stable_order,
 )

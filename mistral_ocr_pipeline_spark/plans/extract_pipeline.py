@@ -1,7 +1,8 @@
 """The flagship Spark job: transcripts → per-turn extraction.
 
-Spark shape (SURVEY.md §3.1): ``scan(transcripts) → salted repartition →
-mapInArrow(extract) → [ordering window where order matters] → sink``.
+Spark shape (SURVEY.md §3.1): ``scan(transcripts) → [per-turn repartition
+of a coarse input] → mapInArrow(extract) → [ordering window where order
+matters] → sink``.
 
 Design points, per the north rule:
 
@@ -16,13 +17,13 @@ Design points, per the north rule:
   PDF-layout rows reach the per-row kernel ``extract_turn``, whose
   per-document loops live inside the batch (same contract as lxml/NumPy
   inner loops).
-* **conv_id-salted repartitioning** defuses long-conversation skew: each
-  turn is independent (the reference re-sorts after unordered completion,
+* **Per-turn repartitioning** defuses long-conversation skew: each turn is
+  independent (the reference re-sorts after unordered completion,
   main.py:203-209, so per-turn parallelism is semantics-preserving), and
-  the shuffle key is ``(conv_id, salt(turn_idx))`` so one 10⁶-turn
-  conversation spreads across up to ``N_SALTS`` tasks.
+  the shuffle key is the turn, ``(conv_id, turn_idx)``, so one 10⁶-turn
+  conversation spreads evenly over every task.
 * **One way to shape the stage's input**: ``stage_input`` (column select
-  plus the "auto" salted repartition) feeds both ``extract_transcripts``
+  plus the "auto" repartition) feeds both ``extract_transcripts``
   and ``checkpoint.lineage.run_extraction``, whose stage runs
   ``_extract_one`` and writes the rows to Parquet in the same task.
 * **Stable turn ordering** is restored only where an order-sensitive
@@ -75,24 +76,6 @@ EXTRACT_OUTPUT_SCHEMA = T.StructType(
         T.StructField("error", T.StringType(), True),
     ]
 )
-
-N_SALTS = 64
-
-
-def salted_repartition(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """Hash-repartition on ``(conv_id, salt)`` with ``salt =
-    pmod(hash(turn_idx), N_SALTS)``.
-
-    A Zipf-head conversation (FIXTURES.md skew profile: one conv = 50% of
-    turns) fans out over up to ``N_SALTS`` tasks instead of pinning one;
-    AQE skew handling is the runtime backstop.  At 100 TB the same key
-    keeps related turns loosely co-located for downstream per-conv ops
-    while bounding any single task's share of a hot conversation."""
-    salt = F.pmod(F.hash(F.col("turn_idx")), F.lit(N_SALTS))
-    if num_partitions:
-        return df.repartition(num_partitions, F.col("conv_id"), salt)
-    return df.repartition(F.col("conv_id"), salt)
-
 
 _PASS_THROUGH = ("conv_id", "turn_idx", "role", "ts")
 _RESULT_FIELDS = [
@@ -200,25 +183,36 @@ def stage_input(
 ) -> DataFrame:
     """The extraction stage's input: the six transcript columns (plus the
     ``extra`` ones a stage function needs, e.g. ``run_extraction``'s
-    ``conv_bucket``), salted-repartitioned when ``repartition`` says so.
+    ``conv_bucket``), hash-repartitioned on the turn, ``(conv_id,
+    turn_idx)``, into ``num_partitions`` partitions (default
+    ``spark.sql.shuffle.partitions``) when ``repartition`` says so.
+
+    Turns are spread evenly over the tasks, however the conversations are
+    sized: a Zipf-head conversation (FIXTURES.md skew profile: one conv =
+    50% of turns) lands on every task, in equal shares.  The key does not
+    co-locate a conversation; order-sensitive steps downstream
+    (``with_stable_order``, ``assemble_conversations``) shuffle on
+    ``conv_id`` themselves.
 
     ``repartition``:
-      * ``"auto"`` (default) — shuffle via ``salted_repartition`` only when
-        the incoming partitioning is too coarse (fewer partitions than the
-        cluster's parallelism).  Extraction is per-turn-independent, so an
-        input that is already fine-grained (Iceberg/parquet splits sized by
+      * ``"auto"`` (default) — shuffle only when the incoming partitioning
+        is too coarse (fewer partitions than the cluster's parallelism).
+        Extraction is per-turn-independent, so an input that is already
+        fine-grained (Iceberg/parquet splits sized by
         ``maxPartitionBytes``) spreads long conversations across tasks *by
         construction* and a pre-shuffle is pure overhead (~30% wall in the
         local bench).  A conv-grouped source (e.g. bucketed-by-conv_id
-        table) arrives coarse → auto engages the salted shuffle.
+        table) arrives coarse → auto engages the shuffle.
       * ``True`` — always shuffle (explicitly skewed sources).
       * ``False`` — never shuffle."""
     src = df.select(*_STAGE_COLUMNS, *extra)
     if repartition == "auto":
         target = src.sparkSession.sparkContext.defaultParallelism
         repartition = src.rdd.getNumPartitions() < target
-    if repartition:
-        src = salted_repartition(src, num_partitions)
+    if repartition and num_partitions:
+        src = src.repartition(num_partitions, "conv_id", "turn_idx")
+    elif repartition:
+        src = src.repartition("conv_id", "turn_idx")
     return src
 
 

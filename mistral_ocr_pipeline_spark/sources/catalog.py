@@ -321,19 +321,24 @@ class TableCatalog:
         snap = f"snap-{uuid.uuid4().hex}"
         base = self.current_tables().get(table)
         snap_dir = os.path.join(self.path(table), snap)
-        if isinstance(df, DataFrame):
-            w = df.write.mode("overwrite")
-            if partition_by:
-                w = w.partitionBy(*partition_by)
-            w.parquet(snap_dir)
-        else:
-            if partition_by:
-                raise ValueError("partition_by needs a Spark DataFrame")
-            os.makedirs(snap_dir)
-            if isinstance(df, pa.Table):
-                pq.write_table(df, os.path.join(snap_dir, f"part-{uuid.uuid4()}.parquet"))
+        if partition_by and not isinstance(df, DataFrame):
+            raise ValueError("partition_by needs a Spark DataFrame")
+        try:
+            if isinstance(df, DataFrame):
+                w = df.write.mode("overwrite")
+                if partition_by:
+                    w = w.partitionBy(*partition_by)
+                w.parquet(snap_dir)
             else:
-                df(snap_dir)
+                os.makedirs(snap_dir)
+                if isinstance(df, pa.Table):
+                    pq.write_table(df, os.path.join(snap_dir, f"part-{uuid.uuid4()}.parquet"))
+                else:
+                    df(snap_dir)
+        except BaseException:
+            # no manifest names the half-written snapshot: drop it here
+            shutil.rmtree(snap_dir, ignore_errors=True)
+            raise
         rel = f"{table}/{snap}"
         self._staged_bases[rel] = base
         return rel

@@ -33,7 +33,10 @@ def main() -> None:
     p.add_argument("--n-buckets", type=int, default=256,
                    help="conv_id bucket count (resume/commit granularity)")
     p.add_argument("--num-partitions", type=int, default=None,
-                   help="extraction parallelism (default: cluster default)")
+                   help="partitions of the per-turn shuffle, which runs only "
+                        "when the input has fewer partitions than the "
+                        "cluster's parallelism (default: "
+                        "spark.sql.shuffle.partitions)")
     args = p.parse_args()
 
     # the job runs on Spark's defaults plus the confs spark-submit passes;

@@ -1157,6 +1157,27 @@ def test_stage_append_name_collision_discards_staged(spark, tmp_path):
     assert sorted(r.id for r in cat.read("t").collect()) == [1, 2]
 
 
+def test_stage_overwrite_failed_write_leaves_no_snapshot(tmp_path):
+    """A write that raises after writing a file leaves no ``snap-*`` dir
+    under the table and no staged base: no manifest would ever name it."""
+    import pyarrow as pa
+
+    cat = TableCatalog(None, str(tmp_path / "wh_failed_write"))
+    kept = cat.stage_overwrite(pa.table({"id": [1]}), "t")
+    before = dict(cat._staged_bases)
+
+    def write(snap_dir):
+        with open(os.path.join(snap_dir, "part-00000.parquet"), "wb") as f:
+            f.write(b"PAR1 cut off before its footer")
+        raise OSError("write failed")
+
+    with pytest.raises(OSError, match="write failed"):
+        cat.stage_overwrite(write, "t")
+    snaps = [d for d in os.listdir(cat.path("t")) if d.startswith("snap-")]
+    assert ["t/" + d for d in snaps] == [kept]
+    assert cat._staged_bases == before
+
+
 def test_commit_forgets_published_staged_bases(spark, tmp_path):
     """``commit`` drops the bases of the snapshots it publishes, so a
     long-lived catalog does not grow by one entry per commit."""

@@ -117,8 +117,8 @@ class TestHtml:
         assert fast == extract_html_blocks(doc, tokenizer="stdlib")
 
     def test_malformed_start_tags_match_stdlib(self):
-        # junk-in-tag / unterminated-quote recovery paths of
-        # _parse_starttag_tolerant (mirrors html.parser parse_starttag)
+        # junk-in-tag / unterminated-quote recovery paths, which the fast
+        # scanner leaves to html.parser's parse_starttag
         from mistral_ocr_pipeline_spark.extractors.html_extract import (
             extract_html_blocks,
         )

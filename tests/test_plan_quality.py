@@ -16,6 +16,8 @@ Plan inspection only — nothing here drains data, so the module is cheap.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -113,7 +115,7 @@ class TestSingleArrowNode:
 
         t = docs.select(
             F.col("doc_id").cast("string").alias("conv_id"),
-            F.lit(0).alias("turn_idx"),
+            F.col("doc_id").cast("int").alias("turn_idx"),
             F.lit("user").alias("role"),
             F.col("text"),
             F.lit(None).cast("string").alias("tool"),
@@ -121,8 +123,12 @@ class TestSingleArrowNode:
         )
         plan = _plan(extract_transcripts(t, repartition=True))
         assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan
-        # exactly the one salted-repartition exchange feeds the extractor
+        # exactly the one per-turn repartition feeds the extractor: keyed on
+        # the turn itself, with no salt expression
         assert plan.count("Exchange") == 1
+        exchange = plan.split("Exchange ", 1)[1].splitlines()[0]
+        assert re.match(r"hashpartitioning\(conv_id#\d+, turn_idx#\d+, \d+\)", exchange), exchange
+        assert "pmod" not in plan
 
 
 class TestSinglePlanComposites:

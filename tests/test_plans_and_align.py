@@ -47,7 +47,7 @@ class TestPlanShape:
 
         coarse = spark.createDataFrame(rows, schema=transcripts_schema()).coalesce(1)
         plan_coarse = _plan(extract_transcripts(coarse))
-        assert "hashpartitioning(conv_id" in plan_coarse  # salted shuffle engaged
+        assert "hashpartitioning(conv_id" in plan_coarse  # per-turn shuffle engaged
 
 
 class TestSchemaAlign:

@@ -6,7 +6,7 @@ deterministic."""
 import json
 import string
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from mistral_ocr_pipeline_spark.extractors.blocks import REDACTED
 from mistral_ocr_pipeline_spark.extractors.dispatch import extract_turn
@@ -112,14 +112,18 @@ _TAGS = ["p", "div", "a", "b", "img", "nav", "table", "tr", "td", "script",
          "style", "h2", "ul", "li", "br", "svg", "template"]
 #   Quote characters ARE in the free-text alphabet: unbalanced quotes inside
 #   a tag (e.g. '<b x="a>') take html.parser down its junk-characters /
-#   incomplete-start-tag recovery, which the fast scanner mirrors via
-#   _parse_starttag_tolerant (round 2 — previously excluded).
+#   incomplete-start-tag recovery.  The sampled fragments spell the markup
+#   the scanner must hand to html.parser: end tags with junk or a \v before
+#   the '>', tolerant attributes, unterminated constructs and stray '<'.
 _FRAGMENTS = st.one_of(
     st.text(alphabet="ab<>&; #x/!=.-\n\t\"'", max_size=14),
     st.sampled_from(
         ["&amp;", "&lt;", "&#65;", "&nbsp;", "&bogus;", "<!-- c -->", "<!--",
-         "<!DOCTYPE html>", "<![CDATA[x]]>", "<?pi?>",
-         '<img src="i.png" alt="a&amp;b">', "<img src=bare alt=plain/>"]
+         "<!DOCTYPE html>", "<![CDATA[x]]>", "<![if x]>", "<![x]>", "<?pi?>",
+         '<img src="i.png" alt="a&amp;b">', "<img src=bare alt=plain/>",
+         "</style foo>", "</script >", "</p\v>", "<h2\v>", "<h2 hidden/>",
+         "<a href=mailto:x@y.com>", '<div class="a"id="b">', "<p @click=x>",
+         "</", "</3>", "< p>", "<"]
     ),
     st.sampled_from(_TAGS).map(lambda t: f"<{t}>"),
     st.sampled_from(_TAGS).map(lambda t: f"</{t}>"),
@@ -127,19 +131,26 @@ _FRAGMENTS = st.one_of(
 )
 
 
-@settings(max_examples=400, deadline=None)
-@given(parts=st.lists(_FRAGMENTS, max_size=24))
-def test_fast_tokenizer_matches_stdlib(parts):
-    """The regex scanner and html.parser must produce identical block
-    lists on arbitrary well- and mal-formed markup."""
+def _blocks_or_error(doc, tokenizer):
     from mistral_ocr_pipeline_spark.extractors.html_extract import (
         extract_html_blocks,
     )
 
+    try:
+        return extract_html_blocks(doc, tokenizer=tokenizer)
+    except Exception as e:  # html.parser rejects some marked sections
+        return f"{type(e).__name__}: {e}"
+
+
+@settings(max_examples=400, deadline=None)
+@given(parts=st.lists(_FRAGMENTS, max_size=24))
+@example(parts=["<p>a</p><style>x</style foo>visible text here</p>"])
+@example(parts=["<p>a", "<"])
+def test_fast_tokenizer_matches_stdlib(parts):
+    """The regex scanner and html.parser must produce identical block
+    lists (or the same error) on arbitrary well- and mal-formed markup."""
     doc = "".join(parts)
-    assert extract_html_blocks(doc, tokenizer="fast") == extract_html_blocks(
-        doc, tokenizer="stdlib"
-    )
+    assert _blocks_or_error(doc, "fast") == _blocks_or_error(doc, "stdlib")
 
 
 # --- batch path == per-row path ---------------------------------------------
@@ -267,3 +278,15 @@ def test_batch_path_matches_per_row_explicit():
     _assert_batch_equals_per_row(slow)
     _assert_batch_equals_per_row([r for pair in zip(fast, slow) for r in pair])
     _assert_batch_equals_per_row(slow[:2] + fast + slow[2:])
+
+
+def test_deep_tool_payload_is_one_error_row():
+    """json's scanner recurses once per nesting level: a tool payload nested
+    past the recursion limit, closed or not, is one error row, never a
+    RecursionError out of the task."""
+    deep = [("x", "[" * 5000 + "]" * 5000), ("x", "[" * 100_000)]
+    for text, tool in deep:
+        rec = extract_turn(text, tool)
+        assert rec["payload_kind"] == "error"
+        assert rec["error"].startswith("invalid tool payload: RecursionError: ")
+    _assert_batch_equals_per_row(deep)

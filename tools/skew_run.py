@@ -1,11 +1,11 @@
-"""Skew-defense evidence: conv_id-salted repartitioning on a Zipf-head input.
+"""Skew-defense evidence: per-turn repartitioning on a Zipf-head input.
 
 Scenario (FIXTURES.md skew profile): one conversation holds ~50% of all
 turns and the input arrives **grouped by conv_id** — the realistic layout
-for an Iceberg table bucketed/partitioned by conversation.  Without
-salting, the hot conversation pins one task for half the total work; the
-salted repartition (`conv_id`, `pmod(hash(turn_idx), 64)`) spreads it over
-up to 64 tasks.
+for an Iceberg table bucketed/partitioned by conversation.  Without a
+shuffle, the hot conversation pins one task for half the total work; the
+repartition on the turn (`conv_id`, `turn_idx`) spreads it evenly over
+every task.
 
 Appends a "## Skew defense" section to BENCH/BASELINE.md.
 """
@@ -46,7 +46,7 @@ def main() -> None:
         df.write.format("noop").mode("overwrite").save()
 
     results = {}
-    for name, mode in [("unsalted (conv-grouped layout)", False), ("salted", True)]:
+    for name, mode in [("unsalted (conv-grouped layout)", False), ("per-turn", True)]:
         run(mode)  # warm
         t0 = time.perf_counter()
         run(mode)
@@ -54,10 +54,10 @@ def main() -> None:
         results[name] = {"sec": round(sec, 2), "turns_per_sec": round(n / sec, 1)}
 
     hot_share = grouped.filter(F.col("conv_id") == "conv-hot").count() / n
-    speedup = results["unsalted (conv-grouped layout)"]["sec"] / results["salted"]["sec"]
+    speedup = results["unsalted (conv-grouped layout)"]["sec"] / results["per-turn"]["sec"]
     section = f"""
 
-## Skew defense (conv_id-salted repartitioning)
+## Skew defense (per-turn repartitioning)
 
 Zipf-head input: one conversation holds {hot_share:.0%} of {n} turns, data
 laid out grouped by conv_id (the Iceberg ``bucket(conv_id)`` layout).
@@ -66,11 +66,11 @@ local[32]:
 | plan | wall sec | turns/sec |
 |---|---|---|
 | unsalted (extraction inherits the conv-grouped partitioning) | {results['unsalted (conv-grouped layout)']['sec']} | {results['unsalted (conv-grouped layout)']['turns_per_sec']} |
-| salted repartition (conv_id, pmod(hash(turn_idx), 64)) | {results['salted']['sec']} | {results['salted']['turns_per_sec']} |
+| repartition (conv_id, turn_idx) | {results['per-turn']['sec']} | {results['per-turn']['turns_per_sec']} |
 
-**Salting speedup on the skewed layout: {speedup:.2f}×** — the hot
-conversation spreads across up to 64 tasks instead of pinning one
-(`plans/extract_pipeline.salted_repartition`).  On evenly-partitioned
+**Repartition speedup on the skewed layout: {speedup:.2f}×** — the hot
+conversation spreads over every task instead of pinning one
+(`plans/extract_pipeline.stage_input`).  On evenly-partitioned
 input the adaptive mode skips this shuffle entirely (see above).
 """
     path = ROOT / "BENCH" / "BASELINE.md"
@@ -79,7 +79,7 @@ input the adaptive mode skips this shuffle entirely (see above).
         existing = existing.split("## Skew defense", 1)[0].rstrip() + "\n\n"
     path.write_text(existing + section.lstrip("\n"))
     print(json.dumps({"results": results, "hot_share": round(hot_share, 3),
-                      "salting_speedup": round(speedup, 2)}))
+                      "repartition_speedup": round(speedup, 2)}))
     spark.stop()
 
 
